@@ -1591,44 +1591,10 @@ def q_dedup_text_pipeline(spark, sf_dir):
     per cluster. Oracle: the DuckDB minhash replica + list-based jaccard
     + a recursive-CTE transitive closure."""
     from racket_linkeddata_spark.operators.graph import dedup_keepers
-    from racket_linkeddata_spark.operators.textstats import (
-        minhash_lsh_candidates, shingles_arrow)
+    from racket_linkeddata_spark.operators.textstats import near_dup_pairs
 
     d = _docs(spark, sf_dir)
-    # pin the candidate pairs (tiny — pairs only): consumed twice
-    # (candidate-id semi-join + verify join) and its minhash tree is the
-    # expensive part. localCheckpoint, NOT persist: persist registers
-    # the plan fragment in the session CacheManager and silently
-    # substitutes InMemoryTableScan into every LATER query containing
-    # the same subtree (plan-shape pollution across the whole session);
-    # localCheckpoint materializes once with no cross-plan effect.
-    cand = minhash_lsh_candidates(d, n=3, k=16,
-                                  bands=4).localCheckpoint(eager=False)
-    # shingle ONLY candidate docs: candidates << corpus at scale, so the
-    # verify stage never evaluates the shingle tree over the full table
-    # (let alone twice, once per join side)
-    cand_ids = (cand.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-                .distinct())
-    # parallelism before the pin: AQE coalesces this small join to one
-    # post-shuffle partition and the checkpoint would store it that
-    # way, single-tasking the shingle tree (the curation-plan lesson;
-    # no-op at production scale via ensure_parallelism's size gate)
-    from racket_linkeddata_spark.operators.util import ensure_parallelism
-    cd = ensure_parallelism(d.join(cand_ids, "doc_id"))
-    sh = (cd.select("doc_id", shingles_arrow(3)(F.col("text")).alias("sh"))
-          .localCheckpoint(eager=False))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    jac = (F.size(F.array_intersect("sh_a", "sh_b"))
-           / F.size(F.array_union("sh_a", "sh_b")))
-    verified = (cand.join(a, "doc_a").join(b, "doc_b")
-                .filter(F.size("sh_a") > 0)
-                .select("doc_a", "doc_b", F.round(jac, 4).alias("j"))
-                .filter(F.col("j") >= 0.5)
-                .select("doc_a", "doc_b"))
-    ids = d.select("doc_id")
-    return dedup_keepers(verified, ids)
+    return dedup_keepers(near_dup_pairs(d, 0.5), d.select("doc_id"))
 
 
 def q_multimodal_features(spark, sf_dir):

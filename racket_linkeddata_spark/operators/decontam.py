@@ -98,20 +98,6 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     return docs.join(contam, id_col, "left_anti")
 
 
-def _is_sizeable(df: DataFrame, threshold: int = 8 * 1024 * 1024) -> bool:
-    """True when the plan's size estimate says the table is worth a
-    parallelism fan-out (>= ``threshold`` bytes, default 8 MB — about
-    one task's worth of CPU-bound kernel work). Unknown/absurd
-    estimates count as sizeable: over-parallelising costs per-task
-    overhead, under-parallelising costs single-task starvation."""
-    try:
-        est = int(str(df._jdf.queryExecution().optimizedPlan()
-                      .stats().sizeInBytes()))
-    except Exception:
-        return True
-    return est >= threshold
-
-
 def _validate_banding(k: int, bands: int):
     """bands > k makes rows_per_band = k // bands = 0: every bucket
     degenerates to the empty string, which equals the empty-signature
@@ -126,8 +112,7 @@ def _validate_banding(k: int, bands: int):
 
 
 def _bands_for(df: DataFrame, n: int, k: int, bands: int,
-               text_col: str, id_col: str, out_id: str,
-               parallel: bool = True) -> DataFrame:
+               text_col: str, id_col: str, out_id: str) -> DataFrame:
     """(out_id, band, bucket) MinHash-LSH band table with the
     EMPTY-SIGNATURE bands removed: a doc with fewer than ``n`` tokens
     minhashes to the all-sentinel signature (textstats._minhash_cols'
@@ -142,7 +127,7 @@ def _bands_for(df: DataFrame, n: int, k: int, bands: int,
     renamed = df.select(F.col(id_col).alias("doc_id"),
                         F.col(text_col).alias("text"))
     sentinel = "\x1f".join([str(_MERSENNE)] * (k // bands))
-    return (_lsh_band_table(renamed, n, k, bands, parallel=parallel)
+    return (_lsh_band_table(renamed, n, k, bands)
             .filter(F.col("bucket") != sentinel)
             .select(F.col("doc_id").alias(out_id), "band", "bucket"))
 
@@ -174,14 +159,15 @@ def fuzzy_contamination(docs: DataFrame, benchmark: DataFrame, *,
             f"fuzzy_contamination: id_col cannot be {id_col!r} — it "
             f"would collide with the other output columns "
             f"(bench_id, n_shared_bands)")
-    cb = _bands_for(docs, n, k, bands, text_col, id_col, "doc_id")
-    # benchmark side fans out only when it is big enough to benefit:
-    # repartitioning a 20-row eval table to 64 partitions cost 16
-    # CPU-s of per-task Arrow-UDF overhead for zero gain (r07
-    # profile), but a caller CAN pass a multi-MB benchmark — size
-    # probe, not a baked-in "tiny" assumption (r07 review)
-    bb = _bands_for(benchmark, n, k, bands, text_col, id_col,
-                    "bench_id", parallel=_is_sizeable(benchmark))
+    from .util import ensure_parallelism
+
+    # only the corpus side fans out: the benchmark side is an eval set
+    # (MBs, often a few rows), and fanning a 20-row table out to 64
+    # partitions cost 16 CPU-s of per-task Arrow-UDF overhead for zero
+    # gain (r07 profile)
+    cb = _bands_for(ensure_parallelism(docs), n, k, bands, text_col,
+                    id_col, "doc_id")
+    bb = _bands_for(benchmark, n, k, bands, text_col, id_col, "bench_id")
     return (cb.join(F.broadcast(bb), ["band", "bucket"])
             .groupBy("doc_id", "bench_id")
             .agg(F.count(F.lit(1)).alias("n_shared_bands"))

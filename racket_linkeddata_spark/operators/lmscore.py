@@ -51,7 +51,7 @@ def _tokens(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     every consumer (counts, tf, sketches) is the CPU-heavy map side of
     this family, and a small corpus parquet packs into ONE split —
     measured 4.5 s single-task vs 1.6 s repartitioned for the CMS
-    sketch at sf1.0. No-op at production scale (size gate)."""
+    sketch at sf1.0. No-op at production scale."""
     from .util import ensure_parallelism
 
     words = F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),

@@ -339,7 +339,7 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 64,
     order is not fixed)."""
     from .util import ensure_parallelism
 
-    ids, cent = _ivf_centroids(embeddings, k, None, None, id_col, vec_col)
+    ids, cent = _ivf_centroids(embeddings, k, None, id_col, vec_col)
     k = len(ids)  # corpus smaller than k: train what was sampled
     corpus = (ensure_parallelism(embeddings)
               .select(F.col(vec_col).cast("array<double>").alias("v"))
@@ -380,10 +380,10 @@ def kmeans_centroids(embeddings: DataFrame, k: int = 64,
 
 
 def _ivf_centroids(embeddings: DataFrame, n_centroids: int,
-                   centroids: Optional[DataFrame], centroid_mod: Optional[int],
+                   centroids: Optional[DataFrame],
                    id_col: str, vec_col: str):
     """Coarse-quantizer selection for ivf_topk (see its docstring for
-    the three modes). Returns (ids int64[], vectors float64[][]) in
+    the two modes). Returns (ids int64[], vectors float64[][]) in
     ascending-id order — the tie-break logic downstream depends on it.
     The driver collect is bounded: exactly ``n_centroids`` rows in the
     default mode (the ORDER BY + LIMIT runs as a per-partition top-n),
@@ -397,11 +397,6 @@ def _ivf_centroids(embeddings: DataFrame, n_centroids: int,
     if centroids is not None:
         cent_rows = centroids.select(*vecs_long).orderBy(id_col).collect()
         source = "empty centroids table"
-    elif centroid_mod is not None:
-        cent_rows = (embeddings
-                     .filter(F.col(id_col) % centroid_mod == 0)
-                     .select(*vecs_long).orderBy(id_col).collect())
-        source = f"no {id_col} divisible by centroid_mod={centroid_mod}"
     else:
         cent_rows = (embeddings.select(*vecs_long)
                      .orderBy(F.md5(F.col(id_col).cast("string")), id_col)
@@ -411,7 +406,7 @@ def _ivf_centroids(embeddings: DataFrame, n_centroids: int,
     if not cent_rows:
         raise ValueError(
             f"ivf_topk: no centroids sampled ({source}); supply a "
-            "non-empty corpus, a centroids table, or a covered modulus")
+            "non-empty corpus or a centroids table")
     return (np.asarray([r[0] for r in cent_rows], dtype=np.int64),
             np.asarray([r[1] for r in cent_rows], dtype=np.float64))
 
@@ -419,11 +414,7 @@ def _ivf_centroids(embeddings: DataFrame, n_centroids: int,
 def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, *,
              n_centroids: int = 8, nprobe: int = 3,
              centroids: Optional[DataFrame] = None,
-             centroid_mod: Optional[int] = None,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    # keyword-only past k: the 4th positional slot used to be
-    # centroid_mod — a stale positional caller must fail loudly, not
-    # silently sample `mod` centroids (round-5 ADVICE)
     """Approximate top-k via an IVF-flat coarse quantizer — the OTHER
     classic ANN scale path next to SRP-LSH (lsh_topk):
 
@@ -437,13 +428,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, *,
       ``n_centroids`` ids (md5 of the decimal id, ties by id), an
       order-by + limit that Spark executes as a per-partition top-n,
       never a full sort. The driver collect is bounded by
-      ``n_centroids`` BY CONSTRUCTION, independent of corpus size
-      (round-4 verdict: the old ``% centroid_mod`` default collected
-      N/97 centroids — linear in N, ~5 GB at 10^9 vectors — and made
-      assignment O(N^2/97));
-      (3) ``centroid_mod`` — the legacy modulus rule, kept only for
-      callers pinned to the old cell ids; its centroid count GROWS
-      LINEARLY with the corpus, so it does not scale.
+      ``n_centroids`` BY CONSTRUCTION, independent of corpus size.
       For real corpora pass sqrt(N)-ish ``n_centroids`` (or k-means
       ``centroids``); the default 8 suits the test-scale corpora.
     - *assign* (map-only): every corpus vector gets the cell of its
@@ -464,7 +449,7 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, *,
     from .util import ensure_parallelism
 
     cent_ids, cent = _ivf_centroids(embeddings, n_centroids, centroids,
-                                    centroid_mod, id_col, vec_col)
+                                    id_col, vec_col)
     cent_n = _unit_rows(cent).T
 
     def _cells_udf(n: int):

@@ -285,25 +285,24 @@ def _mins_arrow_udf(n: int, k: int):
     return mins_udf
 
 
-def _mins_table(docs: DataFrame, n: int, k: int,
-                parallel: bool = True) -> DataFrame:
+def _mins_table(docs: DataFrame, n: int, k: int) -> DataFrame:
     """(doc_id, mins array<bigint>) with the minhash kernel pinned to
     exactly ONE evaluation: the Arrow UDF is the generator input of an
     ``explode(array(...))`` Generate node, and projections do not
     collapse across Generate — so no matter how many downstream columns
     read ``mins``, the kernel appears once in the plan (the round-2
     16-column shape relied on Catalyst subexpression elimination;
-    tests/test_plans.py pins single evaluation structurally)."""
-    from .util import ensure_parallelism
-
-    if parallel:
-        docs = ensure_parallelism(docs)  # the kernel stage is CPU-bound
+    tests/test_plans.py pins single evaluation structurally). The
+    kernel stage is CPU-bound: the public entry points fan ``docs`` out
+    (util.ensure_parallelism) before calling this."""
     mins = _mins_arrow_udf(n, k)(F.col("text"))
     return docs.select("doc_id", F.explode(F.array(mins)).alias("mins"))
 
 
 def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 16) -> DataFrame:
-    m = _mins_table(docs, n, k)
+    from .util import ensure_parallelism
+
+    m = _mins_table(ensure_parallelism(docs), n, k)
     return m.select("doc_id", *[
         F.element_at("mins", j + 1).alias(f"mh{j}") for j in range(k)])
 
@@ -377,8 +376,10 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     This cap is NOT silent — capped-bucket counts are observable via
     lsh_bucket_stats(). ``materialize`` is kept for API compatibility;
     the grouped design no longer needs it."""
+    from .util import ensure_parallelism
+
     del materialize  # no double evaluation to guard against anymore
-    exploded = _lsh_band_table(docs, n, k, bands)
+    exploded = _lsh_band_table(ensure_parallelism(docs), n, k, bands)
     ids = F.array_sort(F.collect_list("doc_id"))
     grouped = (exploded.groupBy("band", "bucket")
                .agg(ids.alias("ids"))
@@ -395,8 +396,7 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
             .distinct())
 
 
-def _lsh_band_table(docs: DataFrame, n: int, k: int, bands: int,
-                    parallel: bool = True) -> DataFrame:
+def _lsh_band_table(docs: DataFrame, n: int, k: int, bands: int) -> DataFrame:
     """One row per (doc, band) with a COLLISION-FREE string bucket key:
     the band's minhash values joined with an ASCII unit separator. Round 2
     bucketed on xxhash64(mh...) — a 64-bit hash whose collisions could
@@ -411,7 +411,7 @@ def _lsh_band_table(docs: DataFrame, n: int, k: int, bands: int,
     Generates (see _mins_table), so the minhash tree is evaluated once
     per doc regardless of bands."""
     rows_per_band = k // bands
-    return (_mins_table(docs, n, k, parallel=parallel)
+    return (_mins_table(docs, n, k)
             .select("doc_id", "mins",
                     F.explode(F.sequence(F.lit(0), F.lit(bands - 1)))
                     .alias("band"))
@@ -429,7 +429,9 @@ def lsh_bucket_stats(docs: DataFrame, n: int = 3, k: int = 16,
     """Observability for the hot-bucket cap: per-band counts of buckets,
     capped buckets, and docs living in capped buckets. 'No silent caps' —
     run this alongside minhash_lsh_candidates at scale."""
-    exploded = _lsh_band_table(docs, n, k, bands)
+    from .util import ensure_parallelism
+
+    exploded = _lsh_band_table(ensure_parallelism(docs), n, k, bands)
     sizes = exploded.groupBy("band", "bucket").agg(
         F.count("*").alias("bsz"))
     capped = F.col("bsz") > max_bucket
@@ -439,6 +441,44 @@ def lsh_bucket_stats(docs: DataFrame, n: int = 3, k: int = 16,
         F.sum(F.when(capped, F.col("bsz")).otherwise(0))
         .alias("n_docs_in_capped"),
         F.max("bsz").alias("max_bucket_size")))
+
+
+def near_dup_pairs(docs: DataFrame,
+                   jaccard_threshold: float = 0.5) -> DataFrame:
+    """(doc_a, doc_b) near-duplicate pairs of ``docs`` (doc_id, text):
+    MinHash-LSH candidates (3-gram shingles, 16 hashes, 4 bands), kept
+    when their exact 3-gram Jaccard, rounded to 4 places, reaches
+    ``jaccard_threshold``. Pairs where doc_a has no 3-grams are
+    dropped. The one copy of the near-dup verify stage, shared by the
+    curation plan and the text-dedup driver query.
+
+    Only candidate documents are shingled (candidates << corpus at
+    scale), and they are fanned out BEFORE the shingle kernel: the
+    candidate-doc join is small, so AQE would run the kernel in one
+    task. It is a semi join so that its size estimate is the docs
+    side's; an inner join's is the product of both sides'. The
+    candidate pairs and the shingles are each read twice, so both are
+    pinned with localCheckpoint — not persist, which registers the
+    plan in the session CacheManager and swaps an InMemoryTableScan
+    into every later query with the same subtree."""
+    from .util import ensure_parallelism, parallel_checkpoint
+
+    cand = minhash_lsh_candidates(docs, n=3, k=16,
+                                  bands=4).localCheckpoint(eager=False)
+    cand_ids = (cand.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+                .distinct())
+    cd = ensure_parallelism(docs.join(cand_ids, "doc_id", "left_semi"))
+    sh = parallel_checkpoint(
+        cd.select("doc_id", shingles_arrow(3)(F.col("text")).alias("sh")))
+    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    jac = (F.size(F.array_intersect("sh_a", "sh_b"))
+           / F.size(F.array_union("sh_a", "sh_b")))
+    return (cand.join(a, "doc_a").join(b, "doc_b")
+            .filter(F.size("sh_a") > 0)
+            .filter(F.round(jac, 4) >= jaccard_threshold)
+            .select("doc_a", "doc_b"))
 
 
 def simhash(docs: DataFrame, bits: int = 60) -> DataFrame:

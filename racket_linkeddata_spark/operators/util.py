@@ -2,25 +2,18 @@
 
 from __future__ import annotations
 
-import re
+import json
 
 from pyspark.sql import DataFrame
 
-_SIZE_RE = re.compile(r"^(\d+)\s*([kmgt]?)b?$", re.IGNORECASE)
-_SIZE_MULT = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
-              "t": 1 << 40}
-
-# Size "estimates" at or above this are Catalyst's unknown-stats
-# default (Long.MaxValue) or its propagation through join/filter
-# arithmetic, never a real measurement (2^60 bytes = 1 EiB; a 100 TB
-# corpus is ~2^47). ensure_parallelism treats them as unknown.
-_JUNK_EST = 1 << 60
-
-# logical-plan operators that compile to an Exchange: their runtime
-# partitioning is AQE's call, so a plan-time partition probe is
-# meaningless (and .rdd on an AQE plan executes its query stages)
-_WIDE_OPS = ("Join", "Aggregate", "Sort", "Window", "Repartition",
-             "Deduplicate", "Distinct", "Except", "Intersect")
+# Logical-plan node classes that map rows within a partition. A plan
+# built only from these (and free of subquery expressions) compiles to
+# no Exchange: its partition count is its sources' and reading it off
+# .rdd plans the scan without running a job. Any other node is wide.
+_NARROW_NODES = frozenset({
+    "LogicalRDD", "LogicalRelation", "LocalRelation", "Range",
+    "Project", "Filter", "Generate", "Sample",
+    "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow"})
 
 
 def worker_runtime_tune() -> None:
@@ -73,12 +66,12 @@ def worker_runtime_tune() -> None:
     zi._zip_mtime_guard = True
 
 
-def parallelism_target(df: DataFrame, multiple: int = 2) -> int:
+def parallelism_target(df: DataFrame) -> int:
     """The one definition of 'enough partitions for CPU-bound work':
-    cluster slots x multiple — shared by ensure_parallelism and the
+    twice the cluster's slots — shared by ensure_parallelism and the
     operators that repartition explicitly (the near-dup pair stream),
     so the policy cannot drift between call sites."""
-    return df.sparkSession.sparkContext.defaultParallelism * multiple
+    return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
 def parallel_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -116,100 +109,54 @@ def f64_sql(x: float) -> str:
     return r if ("e" in r or "E" in r or "n" in r) else r + "e0"
 
 
-def _parse_bytes(s: str, default: int) -> int:
-    m = _SIZE_RE.match(s.strip())
-    if not m:
-        return default
-    return int(m.group(1)) * _SIZE_MULT[m.group(2).lower()]
+def _is_narrow(plan) -> bool:
+    """True when every node of the optimized logical ``plan`` is in
+    _NARROW_NODES and no expression holds a subquery. One structural
+    walk: toJSON lists the plan's nodes pre-order in one py4j call."""
+    return (all(n["class"].rsplit(".", 1)[-1] in _NARROW_NODES
+                for n in json.loads(plan.toJSON()))
+            and plan.subqueriesAll().isEmpty())
 
 
-def ensure_parallelism(df: DataFrame, multiple: int = 2) -> DataFrame:
-    """Repartition up when the scan would yield fewer partitions than
-    the cluster can chew. Spark's file-split packing targets IO bytes
-    (maxPartitionBytes=128MB), which starves CPU-bound stages (Python
-    UDFs, interpreted higher-order functions) on small inputs — measured
-    30x on a single-split corpus. No-op at production scale.
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """``df`` itself when it already yields at least
+    parallelism_target partitions, else ``df.repartition(target)``.
+    Spark sizes scans for IO (128 MB splits; a small corpus is one
+    split) and AQE coalesces small shuffles to one partition, either of
+    which starves a CPU-bound stage (Python UDFs, URDNA2015) — measured
+    30x on a single-split corpus.
 
-    The probe reads the OPTIMIZED plan's size estimate (analysis +
-    optimization only) and compares against the same split arithmetic
-    the scan uses (size / maxPartitionBytes vs target). For file scans
-    the estimate IS the input byte count; at 100 TB the estimate is
-    huge and this is a no-op with near-zero driver cost. ONE branch
-    does call ``df.rdd.getNumPartitions()`` — narrow LogicalRDD-rooted
-    plans (checkpoints), where the captured estimate is untrustworthy
-    (r07: a 15 MB join captured a 6 TB guess) and where .rdd is cheap
-    because there are no AQE query stages to execute. Everywhere else
-    .rdd stays forbidden: on a wide AQE plan it EXECUTES the plan's
-    shuffle stages at construction time (round-4 verdict carried
-    minor; re-checked r07)."""
-    sess = df.sparkSession
-    target = parallelism_target(df, multiple)
-    max_pb = _parse_bytes(
-        sess.conf.get("spark.sql.files.maxPartitionBytes", "134217728"),
-        134217728)
-    open_cost = _parse_bytes(
-        sess.conf.get("spark.sql.files.openCostInBytes", "4194304"),
-        4194304)
+    One rule, read from the optimized plan's structure:
+
+    - narrow plan (see _is_narrow): the partition count is exact and
+      cheap — ``df.rdd.getNumPartitions()`` plans the scan (file
+      splits, checkpointed RDD) without running a job. Size estimates
+      are NOT used here: a checkpoint carries its pre-checkpoint guess
+      (r07: a 15 MB join captured a 6 TB estimate) and a non-splittable
+      source (binaryFile) has one partition per file whatever its size;
+    - wide plan: never touch ``.rdd`` — on an AQE plan it executes the
+      shuffle stages (and subqueries) at construction time. Its final
+      partition count is AQE's call, so size decides: a no-op when the
+      plan's ``sizeInBytes`` covers target x maxPartitionBytes
+      (Catalyst's unknown-stats Long.MaxValue counts as large — AQE
+      owns big shuffles), else repartition. A plan whose stats raise
+      is repartitioned: that is always semantically safe."""
+    target = parallelism_target(df)
     try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if "LogicalRDD" in plan and not any(op in plan
-                                            for op in _WIDE_OPS):
-            # narrow plan over a checkpointed RDD (localCheckpoint):
-            # the RDD's partition count is ground truth and the size
-            # estimate is NOT — Spark captures the pre-checkpoint
-            # plan's estimate into the LogicalRDD, and a join-output
-            # guess can be off by 10^5 (measured: a 15 MB survivors
-            # join "estimated" 6 TB, so round 6 no-op'd here and the
-            # whole minhash tree ran in ONE 28 s task over the
-            # 1-partition checkpoint). Probing .rdd on a narrow plan
-            # is cheap (no AQE query stages to execute); at production
-            # scale the checkpoint has >= target partitions and this
-            # stays a no-op.
-            if df.rdd.getNumPartitions() >= target:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        if _is_narrow(plan):
+            # probed through a fresh Dataset: df's own physical plan
+            # (and PySpark's cached df.rdd) may predate the current
+            # split-size conf
+            if df.select("*").rdd.getNumPartitions() >= target:
                 return df
             return df.repartition(target)
-        est = int(str(
-            df._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes()))
+        est = int(plan.stats().sizeInBytes())
+        split = (df._jdf.sparkSession().sessionState().conf()
+                 .filesMaxPartitionBytes())
     except Exception:
-        # exotic plan with no stats: repartitioning is always
-        # semantically safe, and anything that defeats estimation is
-        # not the giant file scan the no-op exists for
         return df.repartition(target)
-    if est >= _JUNK_EST:
-        # Catalyst's unknown-stats default (Long.MaxValue) or its
-        # propagation through join arithmetic — never a measurement
-        # (100 TB is ~2^47 bytes). AQE may still coalesce such a
-        # plan's final exchange to one partition at runtime, which a
-        # plan-time probe cannot see — the explicit numbered
-        # repartition is AQE-proof.
-        return df.repartition(target)
-    if est >= target * max_pb:
-        # size alone yields >= target splits for SPLITTABLE sources —
-        # checked FIRST so the 100 TB parquet case never pays the
-        # inputFiles listing below. binaryFile relations (the WARC
-        # source) are NON-splittable: one file = one partition no
-        # matter the bytes, so a handful of multi-GB archives would
-        # starve the extraction stage if the size short-circuit
-        # applied (review r05a) — for those, few files means few
-        # partitions, and listing few files is cheap.
-        if "binaryFile" not in \
-                df._jdf.queryExecution().optimizedPlan().toString():
-            return df
-        if len(df.inputFiles()) >= target:
-            return df
-        return df.repartition(target)
-    # small data: splits ~ file count when each file's open cost fills
-    # a split (the session pins openCostInBytes = maxPartitionBytes
-    # exactly so small files never pack) — a staged table written from
-    # >= target partitions is already parallel; re-shuffling it cost
-    # kg_build ~25% (measured). A small NON-file input (createDataFrame,
-    # post-shuffle subtree: inputFiles = []) that already has >= target
-    # partitions gets one redundant shuffle here — of data the estimate
-    # just bounded as small.
-    if open_cost >= max_pb and len(df.inputFiles()) >= target:
-        return df
-    return df.repartition(target)
+    return df if est >= target * split else df.repartition(target)
 
 
 # Tokenizer whitespace: Java's \s (Spark split) is [ \t\n\x0B\f\r]

@@ -42,9 +42,8 @@ def prep_corpus(docs: DataFrame, *,
     from racket_linkeddata_spark.operators.langid import lang_id_model
     from racket_linkeddata_spark.operators.mixture import mixture_sample
     from racket_linkeddata_spark.operators.textstats import (
-        minhash_lsh_candidates, quality_gate, shingles_arrow)
-    from racket_linkeddata_spark.operators.util import (
-        ensure_parallelism, parallel_checkpoint)
+        near_dup_pairs, quality_gate)
+    from racket_linkeddata_spark.operators.util import parallel_checkpoint
 
     d = docs
     # stage 1: exact dedup — one map-side-combinable aggregate on the
@@ -67,22 +66,7 @@ def prep_corpus(docs: DataFrame, *,
         d.join(keep1, "doc_id"))  # consumed by 3 stages
 
     # stage 2: near-dup, scoped to exact-dedup survivors
-    cand = minhash_lsh_candidates(surv, n=3, k=16,
-                                  bands=4).localCheckpoint(eager=False)
-    cand_ids = (cand.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-                .distinct())
-    cd = surv.join(cand_ids, "doc_id")
-    sh = parallel_checkpoint(
-        cd.select("doc_id", shingles_arrow(3)(F.col("text")).alias("sh")))
-    a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    jac = (F.size(F.array_intersect("sh_a", "sh_b"))
-           / F.size(F.array_union("sh_a", "sh_b")))
-    verified = (cand.join(a, "doc_a").join(b, "doc_b")
-                .filter(F.size("sh_a") > 0)
-                .filter(F.round(jac, 4) >= jaccard_threshold)
-                .select("doc_a", "doc_b"))
+    verified = near_dup_pairs(surv, jaccard_threshold)
     kept = (dedup_keepers(verified, surv.select("doc_id"))
             .filter("keep").select("doc_id"))
 

@@ -123,16 +123,7 @@ def test_ensure_parallelism_plan_stats_probe(spark):
     planning via df.rdd. Decision mirrors the scan's split arithmetic:
     small estimated input -> repartition(target); input whose estimate
     exceeds target*maxPartitionBytes -> no-op (same object back)."""
-    from racket_linkeddata_spark.operators.util import (
-        _parse_bytes,
-        ensure_parallelism,
-    )
-
-    assert _parse_bytes("134217728", 0) == 134217728
-    assert _parse_bytes("128MB", 0) == 128 << 20
-    assert _parse_bytes("128m", 0) == 128 << 20
-    assert _parse_bytes("1g", 0) == 1 << 30
-    assert _parse_bytes("junk", 7) == 7
+    from racket_linkeddata_spark.operators.util import ensure_parallelism
 
     target = spark.sparkContext.defaultParallelism * 2
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")

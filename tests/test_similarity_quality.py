@@ -60,11 +60,11 @@ def test_ivf_centroid_count_is_corpus_size_independent(spark):
 
     small = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     big = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    ids_small, _ = _ivf_centroids(small, 6, None, None,
+    ids_small, _ = _ivf_centroids(small, 6, None,
                                   "vec_id", "embedding")
-    ids_big, _ = _ivf_centroids(big, 6, None, None,
+    ids_big, _ = _ivf_centroids(big, 6, None,
                                 "vec_id", "embedding")
-    ids_again, _ = _ivf_centroids(small, 6, None, None,
+    ids_again, _ = _ivf_centroids(small, 6, None,
                                   "vec_id", "embedding")
     assert len(ids_small) == 6 and len(ids_big) == 6  # constant, not N/97
     assert list(ids_small) == list(ids_again)  # deterministic
@@ -96,17 +96,14 @@ def test_ivf_external_centroids_table(spark):
 
 
 def test_ivf_empty_centroid_sample_clear_error(spark):
-    """Review r04: an empty centroid set (empty corpus, or a legacy
-    modulus no id covers) must raise a clear ValueError, not an opaque
-    numpy AxisError."""
+    """Review r04: an empty centroid set (empty corpus) must raise a
+    clear ValueError, not an opaque numpy AxisError."""
     import pytest
 
     from racket_linkeddata_spark.operators.similarity import ivf_topk
 
     e = (spark.read.parquet(f"{SF}/embeddings.parquet")
          .filter((F.col("vec_id") % 97 != 0) & (F.col("vec_id") < 90)))
-    with pytest.raises(ValueError, match="no centroids sampled"):
-        ivf_topk(e, e.limit(2), k=3, centroid_mod=97)
     with pytest.raises(ValueError, match="no centroids sampled"):
         ivf_topk(e.filter(F.col("vec_id") < 0), e.limit(2), k=3)
 
@@ -215,7 +212,7 @@ def test_kmeans_trained_ivf(spark):
         vn = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
         return float((vn @ cn.T).max(axis=1).mean())
 
-    init_ids, init_cent = _ivf_centroids(e, 8, None, None,
+    init_ids, init_cent = _ivf_centroids(e, 8, None,
                                          "vec_id", "embedding")
     trained = [(r.vec_id, r.embedding) for r in km.collect()]
     q_init = assign_quality(list(zip(init_ids, init_cent)))
