@@ -340,7 +340,7 @@ def q_kg_edges(spark, sf_dir):
 def q_kg_nodes(spark, sf_dir):
     from racket_linkeddata_spark.plans.kg import build_kg
 
-    kg = build_kg(doc_pages(spark, sf_dir), persist=False)
+    kg = build_kg(doc_pages(spark, sf_dir))
     return kg.nodes.select("canon_uri", F.col("kind").cast("int").alias("kind"),
                            "n_mentions")
 
@@ -2324,7 +2324,7 @@ def q_text_bigram_surprisal(spark, sf_dir):
     """Conditional (bigram) surprisal — the fluency signal unigram
     surprisal cannot see: integer bits floor(log2 n(w1 *)) -
     floor(log2 n(w1 w2)), mean per doc x1000. One (w1,w2) aggregate
-    (persisted, the counts rationale) + head marginals derived FROM
+    (a lazy localCheckpoint, read twice) + head marginals derived FROM
     it + one scoring equi-join; integer domain end to end."""
     from racket_linkeddata_spark.operators.lmscore import (
         bigram_surprisal)
@@ -2368,7 +2368,7 @@ FROM documents d LEFT JOIN agg a USING (doc_id)"""
 def q_text_tfidf(spark, sf_dir):
     """Per-document top-5 TF-IDF keywords (operators/tfidf.py):
     integer bit-idf (floor-log2, the lmscore convention) so scores are
-    value-exact vs SQL; (doc,term) tf aggregate -> persisted
+    value-exact vs SQL; (doc,term) tf aggregate -> unpinned
     vocab-sized df aggregate -> token equi-join -> WindowGroupLimit
     partial top-K. Ties break on the term, fully deterministic."""
     from racket_linkeddata_spark.operators.tfidf import tfidf_topk
@@ -2815,7 +2815,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG build over sf0.001 documents-derived pages."""
     from racket_linkeddata_spark.plans.kg import build_kg
 
-    kg = build_kg(doc_pages(spark, "/root/testdata/sf0.001"), persist=False)
+    kg = build_kg(doc_pages(spark, "/root/testdata/sf0.001"))
     return kg.edges
 
 

@@ -76,7 +76,8 @@ def main():
          cap(em.q_text_tokens_bpe_real(spark, sf), 40)),
         ("Paragraph dedup (paragraph_dedup): global passage counts are "
          "a two-phase hash aggregate on pkey only (the shuffle carries "
-         "32-char hashes, never text), hot set rides a BROADCAST "
+         "32-char hashes, never text), run once inside the hot-set pin "
+         "(the Scan ExistingRDD below); the hot set rides a BROADCAST "
          "left-anti join, one (doc_id) reassembly shuffle",
          cap(__import__(
              "racket_linkeddata_spark.operators.paragraphs",
@@ -93,13 +94,15 @@ def main():
          "hashpartitioning(shard) exchange",
          cap(em.q_train_pack_offsets(spark, sf), 60)),
         ("LM surprisal (word_surprisal): the corpus tokenizes exactly "
-         "twice — scoring probe + the pinned vocab-sized counts "
-         "aggregate; the grand total rides the cache via a single-row "
-         "broadcast cross join, never a driver action",
+         "twice at run time — scoring probe + the vocab-sized counts "
+         "aggregate; the grand total's copy of the counts exchange "
+         "below runs as a ReusedExchange under AQE, joined via a "
+         "single-row broadcast cross join, never a separate action",
          cap(em.q_text_lm_surprisal(spark, sf), 80)),
         ("Span dedup (span_dedup / duplicate_spans): window hashing "
-         "map-side linear, global hash counts two-phase on whash only, "
-         "hot set BROADCAST left-semi, interval merge + reassembly one "
+         "map-side linear, global hash counts two-phase on whash only "
+         "inside the hot-set pin (the Scan ExistingRDD below), hot set "
+         "BROADCAST left-semi, interval merge + reassembly one "
          "doc-keyed shuffle each",
          cap(em.q_dedup_spans(spark, sf), 90)),
         ("Quota sampling (quota_sample): the rank<=K filter rides "
@@ -116,9 +119,10 @@ def main():
          "candidates pruned by the (cell, m, code) broadcast join key "
          "itself, integer residual ADC",
          cap(em.q_ann_ivf_pq_topk(spark, sf), 90)),
-        ("TF-IDF top-k (tfidf_topk): df is the persisted vocab-sized "
+        ("TF-IDF top-k (tfidf_topk): df is an unpinned vocab-sized "
          "aggregate (NOT a count-over-window — a stopword partition "
-         "would be an unsplittable skew-sort), n_docs a single-row "
+         "would be an unsplittable skew-sort); tf and df each tokenize "
+         "once over one reused scan exchange, n_docs a single-row "
          "broadcast cross join, top-k a partial WindowGroupLimit "
          "below the doc_id exchange",
          cap(em.q_text_tfidf(spark, sf), 80)),

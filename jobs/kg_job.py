@@ -11,7 +11,10 @@ first (sandbox use). --warc <dir> reads raw Common-Crawl-style
 task). --resume anti-joins against <out>/page_log from a previous run
 before processing. --stream runs the Structured Streaming ingest over
 the --pages/--warc directory instead (exactly-once per file via the
-stream checkpoint; re-invoke to drain newly arrived files).
+stream checkpoint; re-invoke to drain newly arrived files). --staging
+writes the extraction once to a durable table: use it on a cluster,
+since without it the extraction is a local checkpoint that executor
+loss destroys.
 """
 
 from __future__ import annotations
@@ -27,7 +30,8 @@ def main():
     p.add_argument("--warc", help="directory/glob of .warc/.warc.gz "
                    "files to read as the pages input")
     p.add_argument("--out", required=True)
-    p.add_argument("--staging")
+    p.add_argument("--staging", help="durable staging path for the "
+                   "extraction (the cluster path)")
     p.add_argument("--resume", action="store_true")
     p.add_argument("--compact", action="store_true",
                    help="fold resume snapshots into snap=0 after the run "

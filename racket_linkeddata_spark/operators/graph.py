@@ -27,7 +27,6 @@ import logging
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 logger = logging.getLogger(__name__)
 
@@ -99,12 +98,13 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     ``stats_out`` (optional dict) gets: ``path`` ("driver-union-find" |
     "pointer-jumping"), ``probe_count`` (bounded edge-probe result),
     and for the distributed path ``rounds`` (iterations run)."""
+    # pinned: the probe, then toPandas or every loop round, read it
     edges = (pairs.select(F.col(a_col).alias("src"),
                           F.col(b_col).alias("dst"))
              .unionByName(pairs.select(F.col(b_col).alias("src"),
                                        F.col(a_col).alias("dst")))
              .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK))
+             .localCheckpoint(eager=False))
     if stats_out is None:
         stats_out = {}
     if driver_threshold > 0:
@@ -118,16 +118,12 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                 "connected_components: driver-union-find path "
                 "(probe=%d <= threshold=%d bidirectional edges)",
                 probe, driver_threshold)
-            try:
-                # one Arrow transfer, tuples not Rows (driver-memory
-                # note in the docstring)
-                pdf = edges.toPandas()
-                rows = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-                return _union_find_local(
-                    rows, pairs.sparkSession,
-                    pairs.schema[a_col].dataType)
-            finally:
-                edges.unpersist()
+            # one Arrow transfer, tuples not Rows (memory note in the
+            # docstring)
+            pdf = edges.toPandas()
+            rows = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+            return _union_find_local(
+                rows, pairs.sparkSession, pairs.schema[a_col].dataType)
         logger.info(
             "connected_components: pointer-jumping path "
             "(probe=%d > threshold=%d bidirectional edges)",
@@ -140,43 +136,40 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id"))
               .localCheckpoint(eager=True))
-    try:
-        rounds = 0
-        for _ in range(max_iter):
-            rounds += 1
-            neighbor_min = (edges.join(labels,
-                                       edges.dst == labels.id, "inner")
-                            .groupBy("src")
-                            .agg(F.min("label").alias("nmin")))
-            stepped = (labels.join(neighbor_min,
-                                   labels.id == neighbor_min.src, "left")
-                       .select(
-                           "id",
-                           F.least("label",
-                                   F.coalesce("nmin", "label"))
-                           .alias("label")))
-            # pointer jump: label <- label[label] (labels are ids, and
-            # every label value is itself a vertex in the table)
-            lut = stepped.select(F.col("id").alias("lid"),
-                                 F.col("label").alias("llabel"))
-            new_labels = (stepped.join(
-                lut, stepped.label == lut.lid, "left")
-                .select("id",
-                        F.coalesce("llabel", "label").alias("label"))
-                .localCheckpoint(eager=True))
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), "id")
-                       .filter(F.col("n.label") != F.col("o.label"))
-                       .count())
-            labels = new_labels
-            if changed == 0:
-                break
-        stats_out["rounds"] = rounds
-        logger.info("connected_components: pointer-jumping converged "
-                    "in %d rounds", rounds)
-        return labels.select("id", F.col("label").alias("cluster_id"))
-    finally:
-        edges.unpersist()
+    rounds = 0
+    for _ in range(max_iter):
+        rounds += 1
+        neighbor_min = (edges.join(labels,
+                                   edges.dst == labels.id, "inner")
+                        .groupBy("src")
+                        .agg(F.min("label").alias("nmin")))
+        stepped = (labels.join(neighbor_min,
+                               labels.id == neighbor_min.src, "left")
+                   .select(
+                       "id",
+                       F.least("label",
+                               F.coalesce("nmin", "label"))
+                       .alias("label")))
+        # pointer jump: label <- label[label] (labels are ids, and
+        # every label value is itself a vertex in the table)
+        lut = stepped.select(F.col("id").alias("lid"),
+                             F.col("label").alias("llabel"))
+        new_labels = (stepped.join(
+            lut, stepped.label == lut.lid, "left")
+            .select("id",
+                    F.coalesce("llabel", "label").alias("label"))
+            .localCheckpoint(eager=True))
+        changed = (new_labels.alias("n")
+                   .join(labels.alias("o"), "id")
+                   .filter(F.col("n.label") != F.col("o.label"))
+                   .count())
+        labels = new_labels
+        if changed == 0:
+            break
+    stats_out["rounds"] = rounds
+    logger.info("connected_components: pointer-jumping converged "
+                "in %d rounds", rounds)
+    return labels.select("id", F.col("label").alias("cluster_id"))
 
 
 def dedup_keepers(pairs: DataFrame, all_ids: DataFrame,

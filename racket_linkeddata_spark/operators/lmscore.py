@@ -18,10 +18,9 @@ scoring); pass ``ref_counts`` — any (token, n) table, e.g.
 the model is trained elsewhere. Out-of-vocabulary tokens score as
 count 1 (maximum surprisal). A caller-supplied ``ref_counts`` is
 consumed by BOTH the scoring join and the grand-total aggregate — pass
-a pinned/cheap lineage (a parquet read or a persisted table), or the
-counts plan evaluates twice (the repo's self-join-over-expensive-trees
-gotcha; the self-counts branch pins its own aggregate for exactly this
-reason).
+a cheap lineage (a parquet read or a localCheckpoint), or an expensive
+counts plan may evaluate twice (the self-counts branch needs no pin:
+exchange reuse shares its aggregate between the two reads).
 
 No reference counterpart (racket-linkeddata does no text analysis);
 part of the LLM-pipeline brief.
@@ -145,19 +144,20 @@ def bigram_surprisal(docs: DataFrame, *,
     100 TB shape: like word_surprisal but the model table is
     DISTINCT-BIGRAM-sized, not vocab-sized — for a web-scale corpus
     pass a precomputed ``ref_counts`` table (a parquet read) instead
-    of relying on the self-counts persist, which is only appropriate
-    up to model tables that fit the cluster's storage memory. Scoring
+    of relying on the self-counts pin, which is only appropriate up
+    to model tables that fit the executors' local storage. Scoring
     is one (w1, w2) equi-join (AQE splits the hot stopword-pair keys)
     + a per-document re-aggregate."""
     pairs = bigram_pairs(docs, text_col=text_col, id_col=id_col)
     if ref_counts is not None:
         counts = ref_counts
     else:
-        # pinned: the head-marginal aggregate AND the scoring join
-        # both consume it (the word_surprisal counts rationale)
+        # pinned: the head marginals and the scoring join read it, and
+        # their inferred null filters differ, so exchange reuse cannot
+        # share it — unpinned, the corpus tokenizes a third time
         counts = (pairs.groupBy("w1", "w2")
                   .agg(F.count(F.lit(1)).alias("n"))
-                  .persist())
+                  .localCheckpoint(eager=False))
     heads = counts.groupBy("w1").agg(F.sum("n").alias("n_head"))
 
     scored = (pairs
@@ -197,15 +197,8 @@ def word_surprisal(docs: DataFrame, *,
     if ref_counts is not None:
         counts = ref_counts
     else:
-        # persist: the scoring join AND the grand total both consume
-        # the counts aggregate — unpinned, the corpus tokenizes a 2nd
-        # and 3rd time (the self-join-over-expensive-trees gotcha; the
-        # .explain showed three parquet+Generate branches). The cached
-        # table is vocab-sized, not corpus-sized. Operator-local
-        # subtree, same rationale as paragraphs.paragraph_dedup.
         counts = (toks.groupBy("token")
-                  .agg(F.count(F.lit(1)).alias("n"))
-                  .persist())
+                  .agg(F.count(F.lit(1)).alias("n")))
     # coalesce: an empty counts table (empty/degenerate ref corpus)
     # sums to NULL — pin it to 1 so intlog2 stays in the integer
     # domain and every score column remains non-NULL (review r06c)

@@ -109,19 +109,17 @@ def paragraph_dedup(docs: DataFrame, min_repeat: int = 10, *,
     """
     paras = _paragraphs(docs, text_col, id_col, sep)
 
-    # persist: the probe count and the anti-join both consume this
-    # aggregate — unpinned, the corpus-wide passage scan + (pkey, count)
-    # shuffle (the operator's dominant cost) would run TWICE (review
-    # r06a). The cached table is pkeys only, bounded above by N/K rows.
-    # Operator-local subtree (depends on this call's inputs), so the
-    # repo's cross-query CacheManager gotcha does not apply.
+    # pinned: the probe count and the anti-join are two actions over
+    # this aggregate — unpinned, the corpus-wide passage scan + (pkey,
+    # count) shuffle (the operator's dominant cost) would run TWICE
+    # (review r06a). The pinned table is pkeys only, at most N/K rows.
     hot = (paras
            .filter(F.length(_norm(F.col("para"))) >= min_len)
            .groupBy("pkey")
            .agg(F.count(F.lit(1)).alias("c"))
            .filter(F.col("c") >= min_repeat)
            .select("pkey")
-           .persist())
+           .localCheckpoint(eager=False))
 
     # hybrid: bounded probe, broadcast the hot set when small — turns
     # the anti-join map-side and kills hot-key skew

@@ -83,16 +83,16 @@ def duplicate_spans(docs: DataFrame, L: int = 20, min_repeat: int = 2, *,
             f"got {min_repeat}")
     wins = _windows(docs, L, text_col, id_col)
 
-    # persist: the probe count and the semi join both consume this
-    # aggregate — unpinned, the corpus-wide window scan + (whash,
+    # pinned: the probe count and the semi join are two actions over
+    # this aggregate — unpinned, the corpus-wide window scan + (whash,
     # count) shuffle would run twice (the paragraph_dedup rationale;
-    # the cached table is hashes only, bounded by N_windows/min_repeat)
+    # the pinned table is hashes only, at most N_windows/min_repeat)
     hot = (wins
            .groupBy("whash")
            .agg(F.count(F.lit(1)).alias("c"))
            .filter(F.col("c") >= min_repeat)
            .select("whash")
-           .persist())
+           .localCheckpoint(eager=False))
     probe = hot.limit(broadcast_threshold + 1).count()
     if stats_out is not None:
         stats_out["hot_probe"] = probe

@@ -133,20 +133,16 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     if max_docs is not None:
         d = d.filter(F.col("doc_id") < max_docs)
     d = ensure_parallelism(d)
-    # persist: otherwise the shingle expression tree is re-evaluated on
-    # both sides of the self-join. DELIBERATE despite the repo-wide
-    # CacheManager gotcha: an A/B/A at sf0.1 measured persist 0.49-0.55s
-    # vs localCheckpoint(eager=False) 0.66-0.80s vs no-pin 0.78s for
-    # this query (columnar in-memory scan beats row-serialized
-    # checkpoint blocks), and the subtree is operator-local (filtered
-    # candidate subset), so no later query can match it. Bounded: this
-    # operator is only ever run on candidate subsets (max_docs / LSH
-    # output), so the cached table is small; the unbounded-scale paths
-    # (minhash_lsh_candidates, embedding_near_dup_lsh) need no cache at
-    # all. Empty shingle sets (docs shorter than n tokens) are excluded
-    # — jaccard is undefined (0/0) for them.
+    # pinned: otherwise the shingle expression tree is re-evaluated on
+    # both sides of the nested-loop self-join. q_dedup_ngram_jaccard at
+    # sf0.1 (4 cores, clearCache() before each of 12 alternating reps):
+    # medians persist 0.71 s, localCheckpoint(eager=False) 0.62 s (won
+    # 12/12 vs persist), no pin 0.65 s. Bounded: this operator only
+    # runs on candidate subsets (max_docs / LSH output). Empty shingle
+    # sets (docs shorter than n tokens) are excluded — jaccard is
+    # undefined (0/0) for them.
     s = (d.select("doc_id", shingles(d, n).alias("sh"))
-         .filter(F.size("sh") > 0).persist())
+         .filter(F.size("sh") > 0).localCheckpoint(eager=False))
     a = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -458,9 +454,7 @@ def near_dup_pairs(docs: DataFrame,
     task. It is a semi join so that its size estimate is the docs
     side's; an inner join's is the product of both sides'. The
     candidate pairs and the shingles are each read twice, so both are
-    pinned with localCheckpoint — not persist, which registers the
-    plan in the session CacheManager and swaps an InMemoryTableScan
-    into every later query with the same subtree."""
+    pinned with localCheckpoint."""
     from .util import ensure_parallelism, parallel_checkpoint
 
     cand = minhash_lsh_candidates(docs, n=3, k=16,

@@ -19,14 +19,14 @@ No reference counterpart (racket-linkeddata does no text analysis);
 part of the LLM-pipeline brief (keyword extraction / doc salience).
 
 100 TB shape: tf is one map-side-combinable (doc, term) aggregate;
-df is a vocab-sized aggregate over it, persisted because BOTH the
-scoring join and its own materialization consume the token lineage
-(the lmscore counts rationale — the cached table is vocab-sized, not
-corpus-sized). df deliberately does NOT use count-over-window on the
-term partition: a stopword's window partition holds every document
-and is an unsplittable single-task skew-sort, while the aggregate is
-partial map-side and the scoring equi-join's hot keys are exactly
-what AQE skew-join splits. The final top-k rides a row_number window
+df is a vocab-sized aggregate over it, unpinned: the corpus tokenizes
+twice (tf, and df's pruned (doc, term) distinct), never thrice, and
+the scan under both is one reused exchange. df
+deliberately does NOT use count-over-window on the term partition:
+a stopword's window partition holds every document and is an
+unsplittable single-task skew-sort, while the aggregate is partial
+map-side and the scoring equi-join's hot keys are exactly what AQE
+skew-join splits. The final top-k rides a row_number window
 with a LITERAL rank bound so InferWindowGroupLimit rewrites it into a
 per-partition partial top-K before the shuffle (the quota_sample
 pattern) — a mega-document never sorts globally.
@@ -49,13 +49,8 @@ def term_scores(docs: DataFrame, *, text_col: str = "text",
     toks = _tokens(docs, text_col, id_col)
     tf = (toks.groupBy(id_col, "token")
           .agg(F.count(F.lit(1)).alias("tf")))
-    # persist: vocab-sized; without the pin the (doc,term) aggregate
-    # tree — and the tokenization under it — evaluates once to build
-    # df and once more inside the scoring join (the repo's self-join-
-    # over-expensive-trees gotcha, the lmscore counts rationale)
     df = (tf.groupBy("token")
-          .agg(F.count(F.lit(1)).alias("df"))
-          .persist())
+          .agg(F.count(F.lit(1)).alias("df")))
     # single-row broadcast, never a driver action; count(*) over the
     # id column only — a metadata-cheap scan
     total = (docs.select(id_col)

@@ -81,9 +81,9 @@ def test_edges_cache_released(spark):
     before = sc._jsc.sc().getPersistentRDDs().size()
     connected_components(pairs, max_iter=5, driver_threshold=0).collect()
     after = sc._jsc.sc().getPersistentRDDs().size()
-    # the explicitly persisted edges table is unpersisted; what remains
-    # are localCheckpoint blocks (released by GC), not .persist leaks —
-    # allow the per-round checkpoints but no unbounded growth vs rounds
+    # every pin here is a localCheckpoint (the edges table and the
+    # per-round labels), released by GC, not a .persist leak — allow
+    # the pins but no unbounded growth vs rounds
     assert after - before <= 2 * 5 + 2, f"cache leak: {before}->{after}"
 
 

@@ -14,16 +14,16 @@ def test_snapshot_resume_merges_edges(spark, tmp_path):
     first = pages.limit(50).cache()
     out = str(tmp_path / "kg")
 
-    kg1 = build_kg(first, persist=False, snapshot_id=0)
+    kg1 = build_kg(first, snapshot_id=0)
     materialize(kg1, out, buckets=8)
 
     log = spark.read.parquet(f"{out}/page_log")
-    kg2 = build_kg(pages, processed_log=log, persist=False, snapshot_id=1)
+    kg2 = build_kg(pages, processed_log=log, snapshot_id=1)
     materialize(kg2, out, buckets=8, mode="append")
     kg2.log.write.mode("append").parquet(f"{out}/page_log")
 
     merged = read_edges(spark, out)
-    full = build_kg(pages, persist=False).edges
+    full = build_kg(pages).edges
     key = ["subj", "pred", "obj_kind", "obj_value", "obj_dt",
            "obj_lang", "graph"]
     assert merged.groupBy(*key).count().filter("count > 1").count() == 0
@@ -38,7 +38,7 @@ def test_snapshot_resume_merges_edges(spark, tmp_path):
 
 def test_materialize_and_resume(spark, tmp_path):
     pages = synthesize_pages(spark, 100, partitions=4).cache()
-    kg = build_kg(pages, persist=False)
+    kg = build_kg(pages)
     out = str(tmp_path / "kg")
     materialize(kg, out, buckets=8)
 
@@ -53,7 +53,7 @@ def test_materialize_and_resume(spark, tmp_path):
     assert log.count() == 100
 
     # resume against the materialized log: nothing left to do
-    kg2 = build_kg(pages, processed_log=log, persist=False)
+    kg2 = build_kg(pages, processed_log=log)
     assert kg2.extracted.count() == 0
 
 
@@ -61,7 +61,7 @@ def test_sql_views(spark):
     from racket_linkeddata_spark.plans.kg import register_views
 
     pages = synthesize_pages(spark, 60, partitions=4)
-    kg = build_kg(pages, persist=False)
+    kg = build_kg(pages)
     register_views(kg)
     top = spark.sql("""
         SELECT pred, count(*) AS n FROM kg_edges
@@ -79,10 +79,10 @@ def test_compact_snapshots_folds_to_single_snapshot(spark, tmp_path):
     pages = synthesize_pages(spark, 60, partitions=4).cache()
     first = pages.limit(40).cache()
     out = str(tmp_path / "kg")
-    materialize(build_kg(first, persist=False, snapshot_id=0), out, buckets=4)
+    materialize(build_kg(first, snapshot_id=0), out, buckets=4)
     log = spark.read.parquet(f"{out}/page_log")
-    materialize(build_kg(pages, processed_log=log, persist=False,
-                         snapshot_id=1), out, buckets=4, mode="append")
+    materialize(build_kg(pages, processed_log=log, snapshot_id=1), out,
+                buckets=4, mode="append")
 
     before = {tuple(r) for r in read_edges(spark, out).collect()}
     nodes_before = {tuple(r) for r in read_nodes(spark, out).collect()}
@@ -96,7 +96,7 @@ def test_compact_snapshots_folds_to_single_snapshot(spark, tmp_path):
         nodes_before
     # compacted table keeps working as the base for a THIRD snapshot
     kg3 = build_kg(pages, processed_log=spark.read.parquet(
-        f"{out}/page_log"), persist=False, snapshot_id=1)
+        f"{out}/page_log"), snapshot_id=1)
     materialize(kg3, out, buckets=4, mode="append")
     assert read_edges(spark, out).count() >= len(before)
 
@@ -112,7 +112,7 @@ def test_compaction_crash_recovery_all_states(spark, tmp_path):
 
     pages = synthesize_pages(spark, 40, partitions=4).cache()
     out = str(tmp_path / "kg")
-    materialize(build_kg(pages, persist=False, snapshot_id=0), out, buckets=4)
+    materialize(build_kg(pages, snapshot_id=0), out, buckets=4)
     want = {tuple(r) for r in read_edges(spark, out).collect()}
 
     path, tmp, old = (f"{out}/edges", f"{out}/edges__compacting",
@@ -177,8 +177,7 @@ def test_kg_job_warc_input(spark, tmp_path):
 
     from racket_linkeddata_spark.plans.kg import build_kg, read_edges
     got = read_edges(spark, out).agg({"n_sources": "sum"}).first()[0]
-    direct = build_kg(synthesize_pages(spark, 30, partitions=2),
-                      persist=False).edges \
+    direct = build_kg(synthesize_pages(spark, 30, partitions=2)).edges \
         .agg({"n_sources": "sum"}).first()[0]
     assert got == direct
 
@@ -225,8 +224,7 @@ def test_kg_job_stream_warc_cli(spark, tmp_path):
     got = {tuple(r[k] for k in key): r.n_sources
            for r in read_edges(spark, out).collect()}
     want = {tuple(r[k] for k in key): r.n_sources
-            for r in build_kg(read_warc(spark, str(wdir)),
-                              persist=False).edges.collect()}
+            for r in build_kg(read_warc(spark, str(wdir))).edges.collect()}
     assert got == want
     log = spark.read.parquet(f"{out}/page_log")
     assert log.count() == log.select("url").distinct().count() == 30

@@ -1,7 +1,8 @@
 """The fan-out rule (operators/util.ensure_parallelism) and the parallel
 pin built on it (parallel_checkpoint): no Spark job at plan time, a
 huge wide plan left to AQE, a starved checkpoint pinned again in
-parallel."""
+parallel. The pin rule: a reused intermediate is a localCheckpoint,
+never a CacheManager entry."""
 
 from pyspark.sql import functions as F
 
@@ -107,3 +108,41 @@ def test_parallel_checkpoint_pins_starved_output_in_parallel(
     pinned = parallel_checkpoint(wide)
     assert made == [pinned]
     assert pinned.rdd.getNumPartitions() == target
+
+
+def test_pins_leave_the_cache_manager_empty(spark):
+    """Every operator that pins a table it reads twice does so with
+    localCheckpoint, which the session CacheManager never sees: a
+    persisted table would serve a later call (or a later rep of the
+    same query) and stay in memory for the rest of the session. The
+    KG nodes read the pinned extraction, so their plan runs no
+    extraction kernel of its own."""
+    import __spark_entry__ as em
+    from racket_linkeddata_spark.operators.graph import (
+        connected_components)
+    from racket_linkeddata_spark.operators.lmscore import (
+        bigram_surprisal, word_surprisal)
+    from racket_linkeddata_spark.operators.paragraphs import (
+        paragraph_dedup)
+    from racket_linkeddata_spark.operators.spans import span_dedup
+    from racket_linkeddata_spark.operators.textstats import (
+        ngram_jaccard_pairs)
+    from racket_linkeddata_spark.operators.tfidf import tfidf_topk
+    from racket_linkeddata_spark.plans.kg import build_kg
+
+    spark.catalog.clearCache()
+    docs = (spark.read.parquet(f"{SF01}/documents.parquet")
+            .select("doc_id", "text"))
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "doc_a long, doc_b long")
+    kg = build_kg(em.doc_pages(spark, SF01))
+    for df in (tfidf_topk(docs), word_surprisal(docs),
+               bigram_surprisal(docs), paragraph_dedup(docs),
+               span_dedup(docs), ngram_jaccard_pairs(docs, max_docs=60),
+               connected_components(pairs),
+               connected_components(pairs, driver_threshold=0),
+               kg.edges, kg.nodes):
+        df.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    nodes_plan = kg.nodes._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in nodes_plan, nodes_plan[:800]

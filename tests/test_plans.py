@@ -16,6 +16,29 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _final_plan(df) -> str:
+    """Run df; its adaptive plan as executed, exchange reuse included."""
+    df.collect()
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
+def _new_sql_plans(spark, fn):
+    """(fn(), the plans of the SQL executions fn ran), from the status
+    store. A localCheckpoint is one of them: the consuming plan shows
+    only its ExistingRDD scan."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    out = fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, [e.physicalPlanDescription() for e in executions()
+                 if e.executionId() > last]
+
+
 def test_entity_link_is_broadcast_join(spark):
     p = _plan(em.q_kg_entity_link(spark, SF))
     assert "BroadcastHashJoin" in p
@@ -187,16 +210,18 @@ def test_paragraph_dedup_plan_shape(spark):
 
     d = em._docs(spark, SF).select("doc_id", "text")
     stats = {}
-    df = paragraph_dedup(d, min_repeat=5, stats_out=stats)
+    df, made = _new_sql_plans(
+        spark, lambda: paragraph_dedup(d, min_repeat=5, stats_out=stats))
     p = _plan(df)
     assert stats["hot_broadcast"]
     assert re.search(r"BroadcastHashJoin .*LeftAnti", p), p[:800]
     assert "CartesianProduct" not in p
-    assert "partial_count" in p
-    # the count-aggregate exchange partitions on pkey, not on text
-    agg_exchange = [seg for seg in p.split("Exchange")
-                    if seg.startswith(" hashpartitioning(pkey")]
-    assert agg_exchange, p[:800]
+    # the hot set is pinned, so its count aggregate runs in the pin's
+    # own plan: two-phase, its exchange partitions on pkey, not on text
+    assert "Scan ExistingRDD" in p, p[:800]
+    assert any("partial_count" in m
+               and "Arguments: hashpartitioning(pkey" in m
+               for m in made), made
 
 
 def test_pack_offsets_single_exchange(spark):
@@ -224,21 +249,15 @@ def test_pack_greedy_reuses_window_partitioning(spark):
 
 def test_lm_surprisal_two_scans_counts_pinned(spark):
     """word_surprisal: the corpus tokenizes exactly TWICE (the scoring
-    probe + the pinned counts aggregate); the grand total rides the
-    cached counts (InMemoryTableScan), not a third tokenize; the
+    probe + the counts aggregate); the grand total reads the counts
+    exchange again through exchange reuse, not a third tokenize; the
     single-row total joins via broadcast, and the count aggregate is
     two-phase (partial_count before its exchange)."""
-    # hermetic: an earlier test that ran this query leaves the counts
-    # subtree in the CacheManager, and the second persist's plan text
-    # nests extra cached-relation echoes (suite-order flake)
-    spark.catalog.clearCache()
-    df = em.q_text_lm_surprisal(spark, SF)
-    p = _plan(df)
-    # toString echoes the cached subtree's Generate under each
-    # InMemoryTableScan: 1 live probe tokenize + 2 cache echoes. The
-    # executed tokenizes are probe + one cache build = 2.
-    assert p.count("InMemoryTableScan") == 2, p[:800]
-    assert len(re.findall(r"Generate explode", p)) == 3, p[:800]
+    p = _final_plan(em.q_text_lm_surprisal(spark, SF))
+    assert "InMemoryTableScan" not in p, p[:800]
+    assert len(re.findall(r"Generate explode", p)) == 2, p[:800]
+    assert re.search(r"ReusedExchange .*hashpartitioning\(token", p), \
+        p[:800]
     assert "BroadcastNestedLoopJoin BuildRight, Cross" in p \
         or "BroadcastNestedLoopJoin Cross" in p, p[:800]
     assert "partial_count" in p
@@ -246,35 +265,40 @@ def test_lm_surprisal_two_scans_counts_pinned(spark):
 
 def test_bigram_surprisal_counts_pinned(spark):
     """bigram_surprisal: the corpus tokenizes exactly TWICE (live
-    scoring probe + the pinned bigram-counts cache build); the head
-    marginals ride the cached counts, never a third tokenize. Plan
-    text: 2 InMemoryTableScan (counts referenced by heads + scoring
-    join), each echoing the cached subtree's 2 Generates + 1 split —
-    so 1 live split + 2 echoes = 3, and 2 live Generates + 4 echoes
-    = 6. All-JVM."""
-    spark.catalog.clearCache()
-    p = _plan(em.q_text_bigram_surprisal(spark, SF))
+    scoring probe + the pinned bigram-counts build); the head
+    marginals read the pin, never a third tokenize. Live plan: 1
+    split + 2 Generates (tokens, pairs) and 2 scans of the pin (heads
+    + scoring join); the pin's own plan: one tokenize (2 Generates)
+    under a two-phase count. All-JVM."""
+    df, made = _new_sql_plans(
+        spark, lambda: em.q_text_bigram_surprisal(spark, SF))
+    p = _plan(df)
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert p.count("InMemoryTableScan") == 2, p[:800]
-    assert p.count("split(") == 3, p[:800]
-    assert len(re.findall(r"Generate explode", p)) == 6, p[:800]
-    assert "partial_count" in p
+    assert "InMemoryTableScan" not in p, p[:800]
+    assert p.count("split(") == 1, p[:800]
+    assert len(re.findall(r"Generate explode", p)) == 2, p[:800]
+    assert p.count("Scan ExistingRDD") == 2, p[:800]
+    [pin] = made
+    ran = pin.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert ran.count("Generate") == 2, pin[:1500]
+    assert "partial_count" in pin
 
 
 def test_tfidf_plan(spark):
-    """tfidf_topk at 100 TB: all-JVM (no Python stage); df rides the
-    persisted vocab-sized aggregate (ONE InMemoryTableScan — the
-    corpus tokenizes twice: live probe + cache build, never thrice);
-    the single-row n_docs total joins via broadcast cross; the literal
-    rank bound fires InferWindowGroupLimit with a Partial top-K
-    BEFORE the doc_id exchange (a mega-document never sorts
-    globally); no df-count-over-window (a stopword partition would be
-    an unsplittable skew-sort)."""
-    spark.catalog.clearCache()
-    p = _plan(em.q_text_tfidf(spark, SF))
+    """tfidf_topk at 100 TB: all-JVM (no Python stage); df is an
+    unpinned vocab-sized aggregate (the corpus tokenizes twice: tf
+    and df's (doc, term) distinct, never thrice, and the scan under
+    both is one reused exchange); the single-row n_docs total joins
+    via broadcast cross; the literal rank bound fires
+    InferWindowGroupLimit with a Partial top-K BEFORE the doc_id
+    exchange (a mega-document never sorts globally); no
+    df-count-over-window (a stopword partition would be an
+    unsplittable skew-sort)."""
+    p = _final_plan(em.q_text_tfidf(spark, SF))
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert p.count("InMemoryTableScan") == 1, p[:800]
+    assert "InMemoryTableScan" not in p, p[:800]
     assert len(re.findall(r"Generate explode", p)) == 2, p[:800]
+    assert "ReusedExchange" in p, p[:800]
     assert "BroadcastNestedLoopJoin BuildRight, Cross" in p \
         or "BroadcastNestedLoopJoin Cross" in p, p[:800]
     below_exchange = p.split("Exchange hashpartitioning(doc_id", 1)[1]
@@ -372,15 +396,17 @@ def test_span_dedup_plan_shape(spark):
 
     d = em._docs(spark, SF).select("doc_id", "text")
     stats = {}
-    df = span_dedup(d, L=6, min_repeat=5, stats_out=stats)
+    df, made = _new_sql_plans(
+        spark, lambda: span_dedup(d, L=6, min_repeat=5, stats_out=stats))
     p = _plan(df)
     assert stats["hot_broadcast"]
     assert re.search(r"BroadcastHashJoin .*LeftSemi", p), p[:800]
     assert "CartesianProduct" not in p
-    assert "partial_count" in p
-    agg_exchange = [seg for seg in p.split("Exchange")
-                    if seg.startswith(" hashpartitioning(whash")]
-    assert agg_exchange, p[:800]
+    # the pinned hot set's count aggregate runs in the pin's own plan
+    assert "Scan ExistingRDD" in p, p[:800]
+    assert any("partial_count" in m
+               and "Arguments: hashpartitioning(whash" in m
+               for m in made), made
 
 
 def test_nfc_normalize_map_only(spark):

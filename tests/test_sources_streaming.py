@@ -94,8 +94,7 @@ def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
         return {tuple(r[k] for k in key): r.n_sources
                 for r in read_edges(spark, out).collect()}
 
-    batch1 = build_kg(synthesize_pages(spark, 40, partitions=2),
-                      persist=False).edges
+    batch1 = build_kg(synthesize_pages(spark, 40, partitions=2)).edges
     want1 = {tuple(r[k] for k in key): r.n_sources
              for r in batch1.collect()}
     assert merged() == want1
@@ -107,8 +106,7 @@ def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
      .write.mode("append").parquet(pages_dir))
     q2 = run_ingest_kg(spark, pages_dir, out, ckpt, buckets=4)
     q2.awaitTermination(180)
-    batch2 = build_kg(synthesize_pages(spark, 70, partitions=2),
-                      persist=False).edges
+    batch2 = build_kg(synthesize_pages(spark, 70, partitions=2)).edges
     want2 = {tuple(r[k] for k in key): r.n_sources
              for r in batch2.collect()}
     assert merged() == want2
@@ -119,8 +117,7 @@ def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
     from racket_linkeddata_spark.plans.kg import read_nodes
     got_nodes = {(r.canon_uri, r.kind): r.n_mentions
                  for r in read_nodes(spark, out).collect()}
-    batch_nodes = build_kg(synthesize_pages(spark, 70, partitions=2),
-                           persist=False).nodes
+    batch_nodes = build_kg(synthesize_pages(spark, 70, partitions=2)).nodes
     want_nodes = {(r.canon_uri, r.kind): r.n_mentions
                   for r in batch_nodes.collect()}
     assert got_nodes == want_nodes
@@ -133,8 +130,7 @@ def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
     slog = spark.read.parquet(f"{out}/page_log")
     got_log = {r.url: (r.n_triples, r.canon_hash, r.status)
                for r in slog.collect()}
-    batch_log = build_kg(synthesize_pages(spark, 70, partitions=2),
-                         persist=False).log
+    batch_log = build_kg(synthesize_pages(spark, 70, partitions=2)).log
     want_log = {r.url: (r.n_triples, r.canon_hash, r.status)
                 for r in batch_log.collect()}
     assert got_log == want_log

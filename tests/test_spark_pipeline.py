@@ -100,7 +100,7 @@ def test_lineage_covers_all_partitions(kg):
 
 def test_resume_skips_processed(spark, pages, kg):
     log = kg.log
-    remaining = build_kg(pages, processed_log=log, persist=False)
+    remaining = build_kg(pages, processed_log=log)
     assert remaining.extracted.count() == 0
 
 

@@ -101,13 +101,13 @@ def test_read_warc_matches_direct_pages(spark, tmp_path):
     key = ["subj", "pred", "obj_kind", "obj_value", "obj_dt",
            "obj_lang", "graph"]
     from_warc = {tuple(r[k] for k in key): r.n_sources
-                 for r in build_kg(pages, persist=False).edges.collect()}
+                 for r in build_kg(pages).edges.collect()}
     direct = spark.createDataFrame(
         [(u, t, h, extract_text(h), "") for u, t, h in recs],
         "url string, warc_ts timestamp, html binary, text string, "
         "lang string")
     want = {tuple(r[k] for k in key): r.n_sources
-            for r in build_kg(direct, persist=False).edges.collect()}
+            for r in build_kg(direct).edges.collect()}
     assert from_warc == want
 
 
@@ -177,7 +177,7 @@ def test_warc_meta_labeled_legacy_page_not_double_decoded(spark,
                  datetime.datetime(2024, 1, 1, tzinfo=UTC),
                  html.encode("windows-1252"))], str(wdir / "l.warc"))
     pages = read_warc(spark, str(wdir))
-    vals = [r.obj_value for r in build_kg(pages, persist=False)
+    vals = [r.obj_value for r in build_kg(pages)
             .edges.select("obj_value").collect()]
     assert "café" in vals
     assert not any("cafÃ©" in (v or "") for v in vals)
@@ -211,8 +211,8 @@ def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
 
     def batch_want():
         return {tuple(r[k] for k in key): r.n_sources
-                for r in build_kg(read_warc(spark, str(wdir)),
-                                  persist=False).edges.collect()}
+                for r in build_kg(
+                    read_warc(spark, str(wdir))).edges.collect()}
 
     assert merged() == batch_want()
 
@@ -248,7 +248,7 @@ def test_read_warc_log_flags_bad_file(spark, tmp_path):
 
     pages = read_warc(spark, str(wdir))
     assert pages.count() == 5
-    assert build_kg(pages, persist=False).edges.count() > 0
+    assert build_kg(pages).edges.count() > 0
 
 
 def test_parse_warc_never_raises_property():
