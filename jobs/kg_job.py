@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, functions as F
 
 
 def main():
@@ -116,11 +116,23 @@ def main():
     processed_log = None
     snapshot_id = 0
     if args.resume:
-        # page_log and lineage are read in SEPARATE try blocks: if
-        # page_log exists but lineage is missing/corrupt (crash between
-        # materialize's two writes), falling back to overwrite would
-        # destroy every prior snapshot on a --resume invocation. Abort
-        # instead and let the operator decide.
+        # materialize lands edges ∥ nodes, and only then page_log ∥
+        # lineage. A crash of run N leaves one of these states:
+        # - during the data phase: edges/nodes of snap N (possibly
+        #   partial), no page_log/lineage rows of run N. A first run
+        #   has no page_log, so it is rebuilt from scratch; a resume
+        #   run re-derives snapshot N and reprocesses the same pages
+        #   (rows of the crashed attempt already in snap N stay there);
+        # - page_log landed, lineage did not: a first run has a
+        #   page_log but no lineage — falling back to overwrite would
+        #   destroy every prior snapshot, so abort below; a resume run
+        #   re-derives snapshot N and skips the logged pages;
+        # - lineage landed, page_log did not: the newest snapshot's
+        #   lineage names urls the log lacks; resuming would process
+        #   them again into snapshot N+1 and count their data twice,
+        #   so abort below. A first run has no page_log and rebuilds.
+        # page_log and lineage are read in SEPARATE try blocks so the
+        # second state aborts instead of overwriting.
         try:
             # pin the prior log eagerly: this job appends to
             # <out>/page_log later, and a lazily-read directory listing
@@ -132,8 +144,8 @@ def main():
             processed_log = None  # first run: nothing to resume from
         if processed_log is not None:
             try:
-                prior = spark.read.parquet(f"{args.out}/lineage") \
-                    .agg({"snapshot_id": "max"}).collect()[0][0]
+                lineage = spark.read.parquet(f"{args.out}/lineage")
+                prior = lineage.agg({"snapshot_id": "max"}).collect()[0][0]
                 snapshot_id = (prior if prior is not None else -1) + 1
             except Exception:
                 raise SystemExit(
@@ -142,6 +154,17 @@ def main():
                     "fall back to overwrite (it would destroy prior "
                     "snapshots). Repair/remove the output dir or rerun "
                     "without --resume to rebuild from scratch.")
+            unlogged = (lineage.filter(F.col("snapshot_id") == prior)
+                        .select(F.explode(F.array("url_min", "url_max"))
+                                .alias("url"))
+                        .join(processed_log, "url", "left_anti").count())
+            if unlogged:
+                raise SystemExit(
+                    f"--resume: {args.out}/lineage records snapshot "
+                    f"{prior} but {args.out}/page_log lacks its pages — "
+                    "refusing to resume (they would be processed and "
+                    "counted twice). Repair/remove the output dir or "
+                    "rerun without --resume to rebuild from scratch.")
 
     kg = build_kg(pages, processed_log=processed_log,
                   staging_path=args.staging, snapshot_id=snapshot_id)

@@ -20,9 +20,10 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Callable, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import (
+    DataFrame, DataFrameWriter, SparkSession, functions as F)
 
 from ..operators.dedup import dedup_triples, skolemize_bnodes
 from ..operators.entity_link import link_entities
@@ -151,6 +152,72 @@ def register_views(kg: KgResult, prefix: str = "kg_") -> None:
     kg.lineage.createOrReplaceTempView(f"{prefix}lineage")
 
 
+def _concurrently(*writes: Callable[[], None]) -> None:
+    """Run independent table writes as concurrent Spark jobs, one driver
+    thread each, and return once every write has finished; then re-raise
+    the first failure in argument order.
+
+    Each write's final stage is only as wide as its output (1-2 tasks
+    on the small tables), so writing them one after another leaves most
+    cores idle. The threads are ``InheritableThread``s: in pinned-thread
+    mode Spark's local properties (job group, job description,
+    scheduler pool) are per thread, and a plain thread would start its
+    jobs outside the caller's group."""
+    from pyspark import InheritableThread
+
+    errors: List[Optional[BaseException]] = [None] * len(writes)
+
+    def run(i: int) -> None:
+        try:
+            writes[i]()
+        except BaseException as e:
+            errors[i] = e
+
+    threads = [InheritableThread(target=run, args=(i,))
+               for i in range(len(writes))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+
+
+def _write_store(out_dir: str, snapshot_id: int, buckets: int,
+                 edges: DataFrame, nodes: DataFrame, log: DataFrame,
+                 lineage: DataFrame,
+                 configure: Callable[[DataFrameWriter], DataFrameWriter]
+                 ) -> None:
+    """Land the four store tables under ``out_dir``. Shared by
+    materialize and the streaming sink (streaming.ingest.run_ingest_kg),
+    so the two stores' layout and landing order cannot drift.
+
+    edges/nodes gain the partition columns ``bucket`` (xxhash64 of the
+    canonical subject/uri mod ``buckets``) and ``snap``
+    (``snapshot_id``); each table is partitioned by the ones of these
+    it carries. ``configure`` sets the save mode and options. The order
+    is materialize's: edges ∥ nodes, then page_log ∥ lineage."""
+    snap = F.lit(snapshot_id).cast("int")
+    edges = (edges
+             .withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)))
+             .withColumn("snap", snap))
+    nodes = (nodes
+             .withColumn("bucket",
+                         F.pmod(F.xxhash64("canon_uri"), F.lit(buckets)))
+             .withColumn("snap", snap))
+
+    def write(df: DataFrame, table: str) -> Callable[[], None]:
+        writer = configure(df.write)
+        partitions = [c for c in ("snap", "bucket") if c in df.columns]
+        if partitions:
+            writer = writer.partitionBy(*partitions)
+        return lambda: writer.parquet(f"{out_dir}/{table}")
+
+    _concurrently(write(edges, "edges"), write(nodes, "nodes"))
+    _concurrently(write(log, "page_log"), write(lineage, "lineage"))
+
+
 def materialize(kg: KgResult, out_dir: str, buckets: int = 64,
                 mode: str = "overwrite") -> None:
     """Write the KG tables in a scale-oriented layout:
@@ -168,21 +235,15 @@ def materialize(kg: KgResult, out_dir: str, buckets: int = 64,
       parquet stand-in for an Iceberg MERGE;
     - page log + lineage land beside them (resume inputs; page-log urls
       are disjoint across snapshots by construction of resume_filter).
-    """
-    snap = F.lit(kg.snapshot_id).cast("int")
-    edges = (kg.edges
-             .withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)))
-             .withColumn("snap", snap))
-    nodes = (kg.nodes
-             .withColumn("bucket",
-                         F.pmod(F.xxhash64("canon_uri"), F.lit(buckets)))
-             .withColumn("snap", snap))
-    edges.write.partitionBy("snap", "bucket").mode(mode).parquet(
-        f"{out_dir}/edges")
-    nodes.write.partitionBy("snap", "bucket").mode(mode).parquet(
-        f"{out_dir}/nodes")
-    kg.log.write.mode(mode).parquet(f"{out_dir}/page_log")
-    kg.lineage.write.mode(mode).parquet(f"{out_dir}/lineage")
+
+    The tables land in two phases, each a pair of concurrent Spark jobs
+    (``_concurrently``): first the data, edges ∥ nodes; then, only
+    after both have committed, the resume record, page_log ∥ lineage.
+    A page is logged as processed only once its triples are in the
+    store, so a resume never skips a page whose data is missing; if the
+    data phase fails, nothing of the resume record is written."""
+    _write_store(out_dir, kg.snapshot_id, buckets, kg.edges, kg.nodes,
+                 kg.log, kg.lineage, lambda w: w.mode(mode))
 
 
 def _recover_compaction(out_dir: str, table: str) -> None:
@@ -255,10 +316,16 @@ def compact_snapshots(spark: SparkSession, out_dir: str) -> None:
     the next reader self-heals. A CONCURRENT reader racing the swap on
     the same filesystem can still observe the path missing for the
     instant between renames — single-writer/single-reader is the
-    stand-in's contract; Iceberg removes that caveat too."""
+    stand-in's contract; Iceberg removes that caveat too.
+
+    edges and nodes are rewritten as two concurrent Spark jobs
+    (``_concurrently``): neither reads the other, and each table has its
+    own tmp, swap and recovery, so a failure in one leaves the other
+    compacted and both readable. One after the other, their few-task
+    final stages left most cores idle."""
     import shutil
 
-    for table, reader in (("edges", read_edges), ("nodes", read_nodes)):
+    def compact(table: str, reader) -> None:
         _recover_compaction(out_dir, table)
         path = f"{out_dir}/{table}"
         tmp = f"{out_dir}/{table}__compacting"
@@ -269,3 +336,6 @@ def compact_snapshots(spark: SparkSession, out_dir: str) -> None:
         shutil.move(path, old)
         shutil.move(tmp, path)
         shutil.rmtree(old)
+
+    _concurrently(lambda: compact("edges", read_edges),
+                  lambda: compact("nodes", read_nodes))

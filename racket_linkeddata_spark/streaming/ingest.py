@@ -121,7 +121,7 @@ def run_ingest_kg(spark: SparkSession, pages_path: str, out_dir: str,
     from ..operators.dedup import dedup_triples, skolemize_bnodes
     from ..operators.extract import triples_only
     from ..operators.lineage import page_log, partition_lineage
-    from ..plans.kg import nodes_from_triples
+    from ..plans.kg import _write_store, nodes_from_triples
 
     def _write_batch(batch_df, batch_id: int):
         # four sinks consume the batch: pin it so the Arrow extraction
@@ -129,30 +129,17 @@ def run_ingest_kg(spark: SparkSession, pages_path: str, out_dir: str,
         batch_df = batch_df.localCheckpoint(eager=True)
         snap = F.lit(batch_id).cast("int")
         triples = skolemize_bnodes(triples_only(batch_df))
-        edges = dedup_triples(triples)
-        # the SAME aggregation the batch plan uses — shared helper, so
-        # the streamed nodes table cannot drift from build_kg's
-        nodes = nodes_from_triples(triples)
-        for name, df in (("page_log", page_log(batch_df)),
-                         ("lineage",
-                          partition_lineage(batch_df, batch_id))):
-            (df.withColumn("snap", snap)
-             .write.partitionBy("snap").mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(f"{out_dir}/{name}"))
-        (edges
-         .withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(buckets)))
-         .withColumn("snap", snap)
-         .write.partitionBy("snap", "bucket").mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(f"{out_dir}/edges"))
-        (nodes
-         .withColumn("bucket",
-                     F.pmod(F.xxhash64("canon_uri"), F.lit(buckets)))
-         .withColumn("snap", snap)
-         .write.partitionBy("snap", "bucket").mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(f"{out_dir}/nodes"))
+        # the SAME aggregations, layout and landing order as the batch
+        # plan: shared helpers, so the streamed store cannot drift from
+        # materialize's (the data lands before the page log that marks
+        # its pages processed)
+        _write_store(
+            out_dir, batch_id, buckets, dedup_triples(triples),
+            nodes_from_triples(triples),
+            page_log(batch_df).withColumn("snap", snap),
+            partition_lineage(batch_df, batch_id).withColumn("snap", snap),
+            lambda w: w.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic"))
 
     triples = stream_triples(_source_stream(spark, pages_path, source),
                              contexts_broadcast)

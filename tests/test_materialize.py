@@ -20,7 +20,9 @@ def test_snapshot_resume_merges_edges(spark, tmp_path):
     log = spark.read.parquet(f"{out}/page_log")
     kg2 = build_kg(pages, processed_log=log, snapshot_id=1)
     materialize(kg2, out, buckets=8, mode="append")
-    kg2.log.write.mode("append").parquet(f"{out}/page_log")
+    # materialize appended kg2's log: every url logged exactly once
+    urls = spark.read.parquet(f"{out}/page_log").select("url")
+    assert urls.count() == urls.distinct().count() == 80
 
     merged = read_edges(spark, out)
     full = build_kg(pages).edges
@@ -146,6 +148,83 @@ def test_compaction_crash_recovery_all_states(spark, tmp_path):
     assert {tuple(r) for r in read_edges(spark, out).collect()} == want
 
 
+def test_failed_data_phase_writes_no_resume_record(spark, tmp_path):
+    """materialize lands edges ∥ nodes before page_log ∥ lineage: when
+    the edges write fails, materialize raises only after the nodes write
+    has finished, and no resume table is written."""
+    import threading
+
+    import pytest
+    from pyspark import InheritableThread
+
+    out = tmp_path / "kg"
+    out.mkdir()
+    (out / "edges").write_text("a file where the edges table goes")
+    kg = build_kg(synthesize_pages(spark, 40, partitions=4))
+    # append: an overwrite would delete the file and succeed
+    with pytest.raises(Exception):
+        materialize(kg, str(out), buckets=4, mode="append")
+
+    assert not [t for t in threading.enumerate()
+                if isinstance(t, InheritableThread)]
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert (out / "nodes" / "_SUCCESS").exists()
+    assert not (out / "page_log").exists()
+    assert not (out / "lineage").exists()
+
+
+def test_store_writes_keep_the_callers_job_group(spark, tmp_path):
+    """The concurrent writes run on threads that inherit the caller's
+    local properties: every job materialize and compact_snapshots start
+    is in the caller's job group."""
+    from racket_linkeddata_spark.plans.kg import compact_snapshots
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.length())}
+
+    kg = build_kg(synthesize_pages(spark, 40, partitions=4))
+    out = str(tmp_path / "kg")
+    before = job_ids()
+    sc.setJobGroup("g", "store writes")
+    try:
+        materialize(kg, out, buckets=4)
+        compact_snapshots(spark, out)
+    finally:
+        sc._jsc.clearJobGroup()
+    started = job_ids() - before
+    assert started
+    assert started <= set(sc.statusTracker().getJobIdsForGroup("g"))
+
+
+def test_concurrent_writes_extract_each_page_once(spark, tmp_path):
+    """Without staging_path, edges ∥ nodes both read the lazy pin of the
+    extraction: one job computes each block and the other waits for it,
+    so every page passes through the extraction once."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    sc = spark.sparkContext
+    seen = sc.accumulator(0)
+
+    @pandas_udf("binary")
+    def counted(html: pd.Series) -> pd.Series:
+        seen.add(len(html))
+        return html
+
+    n = 200
+    # parallelism_target partitions: extract_triples does not fan out
+    pages = synthesize_pages(spark, n, partitions=2 * sc.defaultParallelism)
+    pages = pages.withColumn("html", counted("html"))
+    materialize(build_kg(pages), str(tmp_path / "kg"), buckets=4)
+    assert seen.value == n
+
+
 def test_kg_job_warc_input(spark, tmp_path):
     """kg_job --warc: the spark-submit entry builds the same KG from a
     raw WARC directory as from the equivalent pages table."""
@@ -259,6 +338,41 @@ def test_resume_aborts_when_lineage_unreadable(spark, tmp_path):
     edges_after = sorted(
         str(p) for p in (tmp_path / "kg" / "edges").rglob("*.parquet"))
     assert edges_after == edges_before
+
+
+def test_resume_aborts_when_page_log_lags_lineage(tmp_path):
+    """page_log and lineage land concurrently: if the newest snapshot's
+    lineage committed but its page_log rows did not, --resume must
+    abort — it would reprocess those pages into a new snapshot and
+    count their triples twice."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "kg"
+    env = dict(os.environ, PYTHONPATH=root)
+    run = [sys.executable, os.path.join(root, "jobs", "kg_job.py"),
+           "--out", str(out)]
+    first = subprocess.run(run + ["--n-synth", "40"], env=env,
+                           capture_output=True, text=True)
+    assert first.returncode == 0, first.stderr[-2000:]
+    shutil.copytree(out / "page_log", tmp_path / "page_log_0")
+    second = subprocess.run(run + ["--n-synth", "60", "--resume"], env=env,
+                            capture_output=True, text=True)
+    assert second.returncode == 0, second.stderr[-2000:]
+
+    # the crash state: snapshot 1's lineage landed, its page_log did not
+    shutil.rmtree(out / "page_log")
+    shutil.copytree(tmp_path / "page_log_0", out / "page_log")
+    edges_before = sorted(str(p) for p in (out / "edges").rglob("*.parquet"))
+    third = subprocess.run(run + ["--n-synth", "60", "--resume"], env=env,
+                           capture_output=True, text=True)
+    assert third.returncode != 0
+    assert "refusing" in (third.stderr + third.stdout)
+    assert sorted(
+        str(p) for p in (out / "edges").rglob("*.parquet")) == edges_before
 
 
 def test_kg_job_stream_flag_validation(tmp_path):
