@@ -1845,8 +1845,12 @@ def q_training_data_prep(spark, sf_dir):
        oracle).
 
     Returns (doc_id, lang, n_tokens) for the documents a training run
-    would keep. Oracle: the composed DuckDB replica stitched from the
-    per-operator replicas, value-hash exact."""
+    would keep. prep_corpus runs it as two concurrent branches over the
+    exact-dedup survivors, near-dup losers (2) ∥ steps 3-6, joined
+    once at the end (removing the losers commutes with the
+    per-document steps; plans/curation.py). Oracle: the composed DuckDB
+    replica stitched from the per-operator replicas, in the serial
+    order above, value-hash exact."""
     from racket_linkeddata_spark.plans.curation import prep_corpus
 
     d = _docs(spark, sf_dir)

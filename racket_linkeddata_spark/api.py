@@ -7,6 +7,14 @@ Document-level (pure Python, the reference's library surface):
 Cluster-level (Spark-first):
     session, build_kg, extract_triples, read_nquads, write_nquads,
     synthesize_pages, run_ingest
+
+Side effect on Spark's Python workers: every Arrow/pandas kernel behind
+the cluster-level names first calls ``operators.util.worker_runtime_tune``,
+which patches ``zipimport.zipimporter.invalidate_caches`` in the worker
+process for the rest of its life. Only the archives Spark puts on the
+worker's path are affected (``pyspark.zip``, ``py4j-*.zip``, the
+spark-core jar): they are re-read when their (mtime, size) changes
+instead of on every task. Other archives keep stock invalidation.
 """
 
 from .core.compact import compact

@@ -55,11 +55,12 @@ def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
 
     Ragged, NULL-array, or NULL-element rows fall back to a per-row
     loop with the JVM's NULL semantics (zip_with pads the shorter
-    array with NULL; NULL poisons the fold -> NULL out). Caveat
-    (documented limitation): Arrow surfaces a NULL *element* inside a
-    float vector as NaN, indistinguishable from a genuine NaN, so
-    such rows yield NaN rather than NULL — no corpus in this repo
-    produces one."""
+    array with NULL; NULL poisons the fold -> NULL out). Arrow
+    surfaces a NULL *element* inside an equal-length float vector as
+    NaN, indistinguishable from a genuine NaN, so this kernel yields
+    NaN for such a row; cosine_arrow masks it to NULL in the JVM. A
+    NaN result reaches Spark as NaN, as the JVM fold's does (see
+    _doubles)."""
     from .util import worker_runtime_tune
     worker_runtime_tune()
     n = len(a)
@@ -71,15 +72,15 @@ def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
         if ma.ndim != 2 or mb.ndim != 2 or ma.shape != mb.shape:
             raise ValueError
     except (ValueError, TypeError):
-        out = []
-        for va, vb in zip(a, b):
+        out, null = np.zeros(n), np.zeros(n, dtype=bool)
+        for i, (va, vb) in enumerate(zip(a, b)):
             if va is None or vb is None:
-                out.append(None)
+                null[i] = True
                 continue
             la, lb = list(va), list(vb)
             if len(la) != len(lb) or any(x is None for x in la) \
                     or any(x is None for x in lb):
-                out.append(None)
+                null[i] = True
                 continue
             d = na = nb = 0.0
             for x, y in zip(la, lb):
@@ -91,8 +92,8 @@ def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
             den = np.sqrt(na) * np.sqrt(nb)
             if den == 0:
                 raise ArithmeticError(_ZERO_NORM_MSG)
-            out.append(float(np.float64(d) / den))
-        return pd.Series(out, dtype="float64")
+            out[i] = np.float64(d) / den
+        return _doubles(out, null)
     dot = np.zeros(n)
     na = np.zeros(n)
     nb = np.zeros(n)
@@ -107,7 +108,14 @@ def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
         # on a zero-norm vector (double DIVIDE_BY_ZERO) — keep the
         # loud-failure contract instead of minting NaN silently
         raise ArithmeticError(_ZERO_NORM_MSG)
-    return pd.Series(dot / den)
+    return _doubles(dot / den, np.zeros(n, dtype=bool))
+
+
+def _doubles(values: np.ndarray, null: np.ndarray) -> pd.Series:
+    """A float64 result whose NaNs reach Spark as NaN: Spark masks a
+    plain float Series on its way to Arrow (NaN -> NULL), but passes a
+    masked-array Series through with only ``null`` as NULL."""
+    return pd.Series(pd.arrays.FloatingArray(values, null))
 
 
 _ZERO_NORM_MSG = (
@@ -125,8 +133,13 @@ _cosine_arrow = _cosine_arrow.asNondeterministic()
 
 def cosine_arrow(a, b):
     """Arrow cosine for candidate-verification volumes (bit-identical
-    to cosine(); see _cosine_arrow)."""
-    return _cosine_arrow(a, b)
+    to cosine(); see _cosine_arrow). A row whose vectors hold a NULL
+    element is NULL, as in cosine()'s fold: the kernel cannot tell
+    such an element from NaN, so the JVM decides it first."""
+    a, b = (F.col(c) if isinstance(c, str) else c for c in (a, b))
+    has_null = (F.exists(a, lambda x: x.isNull())
+                | F.exists(b, lambda x: x.isNull()))
+    return F.when(has_null, F.lit(None)).otherwise(_cosine_arrow(a, b))
 
 
 def brute_force_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import json
+from typing import Callable, List, Optional, TypeVar
 
 from pyspark.sql import DataFrame
+
+T = TypeVar("T")
 
 # Logical-plan node classes that map rows within a partition. A plan
 # built only from these (and free of subquery expressions) compiles to
@@ -14,6 +17,10 @@ _NARROW_NODES = frozenset({
     "LogicalRDD", "LogicalRelation", "LocalRelation", "Range",
     "Project", "Filter", "Generate", "Sample",
     "ArrowEvalPython", "BatchEvalPython", "MapInPandas", "MapInArrow"})
+
+
+# File names of the archives Spark puts on a Python worker's sys.path
+_SPARK_ARCHIVES = ("pyspark.zip", "py4j-*.zip", "spark-core_*.jar")
 
 
 def worker_runtime_tune() -> None:
@@ -33,21 +40,31 @@ def worker_runtime_tune() -> None:
     the archive changed; this backports that behavior for the
     long-lived reused workers. Semantics are preserved: a NEW zip on
     sys.path gets a fresh zipimporter (first call always reads), and a
-    replaced/updated zip changes mtime and is re-read.
+    replaced/updated zip changes mtime and is re-read. The guard covers
+    only the archives Spark itself puts on the worker's path
+    (_SPARK_ARCHIVES: ``pyspark.zip``, ``py4j-*.zip`` and the
+    spark-core jar, a 15 MB zip that is as costly to re-parse), which
+    the distribution ships and nothing rewrites while a worker lives;
+    every other archive keeps stock, unconditional invalidation.
 
     This must run INSIDE the worker process, which is exactly where
     the repo's UDF bodies execute — hence the call-from-kernel shape
-    rather than a session conf (there is none for it)."""
+    rather than a session conf (there is none for it). It patches the
+    zipimporter class for the rest of the process's life."""
     import zipimport
 
     zi = zipimport.zipimporter
     if getattr(zi, "_zip_mtime_guard", False):
         return
+    import fnmatch
     import os as _os
 
     orig = zi.invalidate_caches
 
     def invalidate_caches(self):
+        name = _os.path.basename(self.archive)
+        if not any(fnmatch.fnmatch(name, p) for p in _SPARK_ARCHIVES):
+            return orig(self)
         try:
             st = _os.stat(self.archive)
             key = (st.st_mtime_ns, st.st_size)
@@ -64,6 +81,43 @@ def worker_runtime_tune() -> None:
 
     zi.invalidate_caches = invalidate_caches
     zi._zip_mtime_guard = True
+
+
+def concurrently(*fns: Callable[[], T]) -> List[T]:
+    """Run independent pieces of Spark work as concurrent jobs, one
+    driver thread each, and return their results in argument order once
+    every one has finished; if any raised, re-raise the first failure in
+    argument order instead.
+
+    Used where the pieces read nothing of each other: the KG store's
+    table writes (plans.kg), each ending in a final stage only as wide
+    as its output, and prep_corpus's two branches (plans.curation). Run
+    one after another, their few-task stages leave most cores idle. The
+    threads are ``InheritableThread``s: in pinned-thread mode Spark's
+    local properties (job group, job description, scheduler pool) are
+    per thread, and a plain thread would start its jobs outside the
+    caller's group."""
+    from pyspark import InheritableThread
+
+    results: List[Optional[T]] = [None] * len(fns)
+    errors: List[Optional[BaseException]] = [None] * len(fns)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fns[i]()
+        except BaseException as e:
+            errors[i] = e
+
+    threads = [InheritableThread(target=run, args=(i,))
+               for i in range(len(fns))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 
 def parallelism_target(df: DataFrame) -> int:

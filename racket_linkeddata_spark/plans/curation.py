@@ -3,13 +3,30 @@ end-to-end prep pipeline, shared by the driver query
 (``__spark_entry__.q_training_data_prep``, oracle-pinned) and the
 spark-submit CLI (``jobs/prep_job.py``):
 
-  1. exact dedup (full-text md5, keep min id);
-  2. near-dup dedup: MinHash-LSH candidates -> exact Jaccard verify on
-     candidate-only shingles -> connected components -> one keeper;
-  3. quality gate (full C4/Gopher signal set, fixed-point);
-  4. benchmark decontamination (optional — broadcast gram probe);
-  5. deterministic mixture sampling (optional recipe);
-  6. annotate survivors: language + BPE token price.
+  1. exact dedup (full-text md5, keep min id) -> the survivors, pinned;
+  then two branches over the survivors, run as concurrent Spark jobs
+  (``operators.util.concurrently``):
+  A. near-dup losers:
+     2. near-dup dedup: MinHash-LSH candidates -> exact Jaccard verify
+        on candidate-only shingles -> connected components; each
+        cluster keeps its minimum id, the other ids are dropped;
+  B. per-document work:
+     3. quality gate (full C4/Gopher signal set, fixed-point);
+     4. benchmark decontamination (optional — broadcast gram probe);
+     5. deterministic mixture sampling (optional recipe);
+     6. annotate: language + BPE token price, pinned eagerly;
+  and once both have finished, B's rows left-anti-joined to A's ids.
+
+The branches read nothing of each other. Every step of B keeps or
+annotates a document from that document's own columns (the benchmark
+is fixed; the mixture is a per-source md5 threshold on doc_id), so it
+commutes with removing the near-dup losers, and A chooses them over
+the same survivors in both orders: the output is the serial chain's
+(2 to 6), which the DuckDB oracle keeps. B also filters and annotates
+the losers, whose work it drops at the join; in exchange its jobs
+overlap A's instead of waiting for them. The anti join reads only the
+losers (the dropped ids of dedup_keepers' verdicts); a semi join to the
+keepers would first rejoin every survivor id to the clusters.
 
 Every stage is the corresponding operator module; this file only
 composes them and pins the twice-consumed intermediates (the
@@ -35,15 +52,18 @@ def prep_corpus(docs: DataFrame, *,
     keep. ``docs`` needs (doc_id, text, source). ``benchmark`` (a
     one-column text table) enables decontamination; ``mixture_weights``
     enables per-source subsampling; ``merges`` is the BPE merge table
-    for pricing (default: the tiny closed-form pair)."""
+    for pricing (default: the tiny closed-form pair). Runs as two
+    concurrent branches joined once at the end (module docstring)."""
     from racket_linkeddata_spark.operators.bpe import bpe_token_count
     from racket_linkeddata_spark.operators.decontam import decontaminate
-    from racket_linkeddata_spark.operators.graph import dedup_keepers
+    from racket_linkeddata_spark.operators.graph import (
+        connected_components)
     from racket_linkeddata_spark.operators.langid import lang_id_model
     from racket_linkeddata_spark.operators.mixture import mixture_sample
     from racket_linkeddata_spark.operators.textstats import (
         near_dup_pairs, quality_gate)
-    from racket_linkeddata_spark.operators.util import parallel_checkpoint
+    from racket_linkeddata_spark.operators.util import (
+        concurrently, parallel_checkpoint)
 
     d = docs
     # stage 1: exact dedup — one map-side-combinable aggregate on the
@@ -63,37 +83,48 @@ def prep_corpus(docs: DataFrame, *,
              .groupBy("th").agg(F.min("doc_id").alias("doc_id"))
              .select("doc_id"))
     surv = parallel_checkpoint(
-        d.join(keep1, "doc_id"))  # consumed by 3 stages
+        d.join(keep1, "doc_id"))  # read by both branches
 
-    # stage 2: near-dup, scoped to exact-dedup survivors
-    verified = near_dup_pairs(surv, jaccard_threshold)
-    kept = (dedup_keepers(verified, surv.select("doc_id"))
-            .filter("keep").select("doc_id"))
+    def dropped() -> DataFrame:
+        # branch A, stage 2: near-dup clusters over the exact-dedup
+        # survivors. A cluster keeps its minimum id, the component
+        # label (graph.dedup_keepers' rule); its other members are
+        # dropped. Survivors in no cluster keep themselves.
+        comp = connected_components(near_dup_pairs(surv, jaccard_threshold))
+        return (comp.filter(F.col("cluster_id") != F.col("id"))
+                .select(F.col("id").alias("doc_id")))
 
-    # stage 3: the composed quality gate (full signal set; fixed-point)
-    # pinned: consumed twice by decontaminate (gram explode + the
-    # survivor anti-join)
     qk = dict(min_tokens=5, max_tokens=100_000,
               min_mean_word_len_x1000=2000, max_mean_word_len_x1000=20_000,
               min_stopwords=1, max_symbol_x1000=100,
               max_bullet_x1000=900, max_ellipsis_x1000=300)
     qk.update(quality_kwargs or {})
-    gated = parallel_checkpoint(quality_gate(
-        surv.join(kept, "doc_id").select("doc_id", "text", "source"),
-        **qk))
 
-    # stage 4: benchmark decontamination (broadcast gram probe)
-    clean = decontaminate(gated, benchmark, n=decontam_n) \
-        if benchmark is not None else gated
+    def annotated() -> DataFrame:
+        # branch B, stage 3: the composed quality gate (full signal
+        # set; fixed-point). Pinned: consumed twice by decontaminate
+        # (gram explode + the survivor anti-join)
+        gated = parallel_checkpoint(quality_gate(
+            surv.select("doc_id", "text", "source"), **qk))
 
-    # stage 5: deterministic mixture sampling; pinned: stage 6 fans it
-    # out to three branches
-    mixed = mixture_sample(clean, mixture_weights,
-                           default_weight=default_weight) \
-        if mixture_weights else clean
-    mixed = parallel_checkpoint(mixed)
+        # stage 4: benchmark decontamination (broadcast gram probe)
+        clean = decontaminate(gated, benchmark, n=decontam_n) \
+            if benchmark is not None else gated
 
-    # stage 6: annotate survivors — both map-only ops
-    lang = lang_id_model(mixed).select("doc_id", "lang")
-    bpe = bpe_token_count(mixed, merges or [("t", "h"), ("th", "e")])
-    return mixed.select("doc_id").join(lang, "doc_id").join(bpe, "doc_id")
+        # stage 5: deterministic mixture sampling; pinned: stage 6 fans
+        # it out to three branches
+        mixed = mixture_sample(clean, mixture_weights,
+                               default_weight=default_weight) \
+            if mixture_weights else clean
+        mixed = parallel_checkpoint(mixed)
+
+        # stage 6: annotate survivors — both map-only ops. Pinned
+        # eagerly, so that the annotation runs on this branch's thread
+        # rather than in the caller's final job.
+        lang = lang_id_model(mixed).select("doc_id", "lang")
+        bpe = bpe_token_count(mixed, merges or [("t", "h"), ("th", "e")])
+        return (mixed.select("doc_id").join(lang, "doc_id")
+                .join(bpe, "doc_id").localCheckpoint(eager=True))
+
+    drop, ann = concurrently(dropped, annotated)
+    return ann.join(drop, "doc_id", "left_anti")

@@ -20,7 +20,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional
+from typing import Callable, Optional
 
 from pyspark.sql import (
     DataFrame, DataFrameWriter, SparkSession, functions as F)
@@ -29,6 +29,7 @@ from ..operators.dedup import dedup_triples, skolemize_bnodes
 from ..operators.entity_link import link_entities
 from ..operators.extract import extract_triples, triples_only
 from ..operators.lineage import page_log, partition_lineage, resume_filter
+from ..operators.util import concurrently
 
 
 def session(app: str = "kg", cpus: Optional[int] = None,
@@ -152,38 +153,6 @@ def register_views(kg: KgResult, prefix: str = "kg_") -> None:
     kg.lineage.createOrReplaceTempView(f"{prefix}lineage")
 
 
-def _concurrently(*writes: Callable[[], None]) -> None:
-    """Run independent table writes as concurrent Spark jobs, one driver
-    thread each, and return once every write has finished; then re-raise
-    the first failure in argument order.
-
-    Each write's final stage is only as wide as its output (1-2 tasks
-    on the small tables), so writing them one after another leaves most
-    cores idle. The threads are ``InheritableThread``s: in pinned-thread
-    mode Spark's local properties (job group, job description,
-    scheduler pool) are per thread, and a plain thread would start its
-    jobs outside the caller's group."""
-    from pyspark import InheritableThread
-
-    errors: List[Optional[BaseException]] = [None] * len(writes)
-
-    def run(i: int) -> None:
-        try:
-            writes[i]()
-        except BaseException as e:
-            errors[i] = e
-
-    threads = [InheritableThread(target=run, args=(i,))
-               for i in range(len(writes))]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    for e in errors:
-        if e is not None:
-            raise e
-
-
 def _write_store(out_dir: str, snapshot_id: int, buckets: int,
                  edges: DataFrame, nodes: DataFrame, log: DataFrame,
                  lineage: DataFrame,
@@ -214,8 +183,8 @@ def _write_store(out_dir: str, snapshot_id: int, buckets: int,
             writer = writer.partitionBy(*partitions)
         return lambda: writer.parquet(f"{out_dir}/{table}")
 
-    _concurrently(write(edges, "edges"), write(nodes, "nodes"))
-    _concurrently(write(log, "page_log"), write(lineage, "lineage"))
+    concurrently(write(edges, "edges"), write(nodes, "nodes"))
+    concurrently(write(log, "page_log"), write(lineage, "lineage"))
 
 
 def materialize(kg: KgResult, out_dir: str, buckets: int = 64,
@@ -237,10 +206,10 @@ def materialize(kg: KgResult, out_dir: str, buckets: int = 64,
       are disjoint across snapshots by construction of resume_filter).
 
     The tables land in two phases, each a pair of concurrent Spark jobs
-    (``_concurrently``): first the data, edges ∥ nodes; then, only
-    after both have committed, the resume record, page_log ∥ lineage.
-    A page is logged as processed only once its triples are in the
-    store, so a resume never skips a page whose data is missing; if the
+    (``operators.util.concurrently``): first the data, edges ∥ nodes;
+    then, only after both have committed, the resume record, page_log
+    ∥ lineage. A page is logged as processed only once its triples are
+    in the store, so a resume never skips a page whose data is missing; if the
     data phase fails, nothing of the resume record is written."""
     _write_store(out_dir, kg.snapshot_id, buckets, kg.edges, kg.nodes,
                  kg.log, kg.lineage, lambda w: w.mode(mode))
@@ -319,9 +288,9 @@ def compact_snapshots(spark: SparkSession, out_dir: str) -> None:
     stand-in's contract; Iceberg removes that caveat too.
 
     edges and nodes are rewritten as two concurrent Spark jobs
-    (``_concurrently``): neither reads the other, and each table has its
-    own tmp, swap and recovery, so a failure in one leaves the other
-    compacted and both readable. One after the other, their few-task
+    (``operators.util.concurrently``): neither reads the other, and each
+    table has its own tmp, swap and recovery, so a failure in one
+    leaves the other compacted and both readable. One after the other, their few-task
     final stages left most cores idle."""
     import shutil
 
@@ -337,5 +306,5 @@ def compact_snapshots(spark: SparkSession, out_dir: str) -> None:
         shutil.move(tmp, path)
         shutil.rmtree(old)
 
-    _concurrently(lambda: compact("edges", read_edges),
+    concurrently(lambda: compact("edges", read_edges),
                   lambda: compact("nodes", read_nodes))

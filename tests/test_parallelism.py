@@ -2,11 +2,17 @@
 pin built on it (parallel_checkpoint): no Spark job at plan time, a
 huge wide plan left to AQE, a starved checkpoint pinned again in
 parallel. The pin rule: a reused intermediate is a localCheckpoint,
-never a CacheManager entry."""
+never a CacheManager entry. The runner of independent Spark work
+(concurrently): every function finishes, the first failure wins, and
+the jobs stay in the caller's job group."""
 
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from racket_linkeddata_spark.operators.util import (
+    concurrently,
     ensure_parallelism,
     parallel_checkpoint,
 )
@@ -146,3 +152,58 @@ def test_pins_leave_the_cache_manager_empty(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     nodes_plan = kg.nodes._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in nodes_plan, nodes_plan[:800]
+
+
+def test_concurrently_finishes_every_function_before_raising(spark):
+    """A failing function does not cut the others short: the runner
+    raises only once the slow one has returned."""
+    done = []
+
+    def fail():
+        raise ValueError("fails at once")
+
+    def slow():
+        time.sleep(0.5)
+        done.append("slow")
+
+    with pytest.raises(ValueError):
+        concurrently(fail, slow)
+    assert done == ["slow"]
+
+
+def test_concurrently_reraises_the_first_failure_in_argument_order(spark):
+    """When several functions fail, the one listed first is re-raised,
+    whichever failed first in time."""
+    def late():
+        time.sleep(0.5)
+        raise KeyError("listed first, fails last")
+
+    def early():
+        raise ValueError("listed second, fails first")
+
+    with pytest.raises(KeyError):
+        concurrently(late, early)
+
+
+def test_concurrently_keeps_the_callers_job_group(spark):
+    """Results come back in argument order, and every job the functions
+    start is in the job group set on the calling thread."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.length())}
+
+    before = job_ids()
+    sc.setJobGroup("runner", "concurrently")
+    try:
+        got = concurrently(lambda: spark.range(10).count(),
+                           lambda: spark.range(5).repartition(3).count())
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got == [10, 5]
+    started = job_ids() - before
+    assert len(started) >= 2
+    assert started <= set(sc.statusTracker().getJobIdsForGroup("runner"))

@@ -347,3 +347,27 @@ def test_cosine_arrow_bit_identical_to_jvm(spark):
                                  "va array<double>, vb array<double>")
     with pytest.raises(Exception, match="zero-norm"):
         zero.select(cosine_arrow("va", "vb").alias("c")).collect()
+
+
+def test_cosine_arrow_null_element_is_null_like_jvm(spark):
+    """A NULL element inside equal-length vectors reaches the Arrow
+    kernel as NaN; cosine_arrow must still return NULL for that row, as
+    the JVM fold does, and leave a genuine NaN element NaN."""
+    import math
+
+    from racket_linkeddata_spark.operators.similarity import (
+        cosine, cosine_arrow)
+
+    df = spark.createDataFrame(
+        [(0, [1.0, None], [1.0, 2.0]), (1, [1.0, 2.0], [None, 2.0]),
+         (2, [float("nan"), 1.0], [1.0, 1.0]), (3, [1.0, 2.0], [2.0, 1.0])],
+        "i int, va array<double>, vb array<double>")
+    got = df.select(
+        "i", cosine(F.col("va"), F.col("vb")).alias("jvm"),
+        cosine_arrow(F.col("va"), F.col("vb")).alias("arrow")
+    ).orderBy("i").collect()
+    assert [r.arrow is None for r in got] == [True, True, False, False]
+    for r in got:
+        assert (r.jvm is None and r.arrow is None
+                or math.isnan(r.jvm) and math.isnan(r.arrow)
+                or r.jvm == r.arrow), r
