@@ -7,12 +7,12 @@ Usage:
   python bench_extra.py --sf-dir /root/testdata/sf1.0 --reps 3 \
       --queries training_data_prep text_textrank --noop
   python bench_extra.py --explain --queries text_textrank \
-      --out plans/r07 --suffix before
+      --out <dir> --suffix before
 
 --noop times ``df.write.format('noop')`` (computes every column) instead
 of ``.count()`` (the frozen bench's methodology); both are reported so
 changes can be compared under either sink. --explain writes
-``.explain('formatted')`` to plans/r07/<query>_<suffix>.txt.
+``.explain('formatted')`` to <out>/<query>_<suffix>.txt.
 """
 
 from __future__ import annotations
@@ -39,9 +39,11 @@ def main():
                    help="time a noop-sink write instead of count()")
     p.add_argument("--explain", action="store_true",
                    help="write explain('formatted') per query, no timing")
-    p.add_argument("--out", default="plans/r07")
+    p.add_argument("--out", help="--explain's output dir (required)")
     p.add_argument("--suffix", default="before")
     args = p.parse_args()
+    if args.explain and not args.out:
+        p.error("--explain needs --out")
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry_mod

@@ -93,12 +93,13 @@ def main():
                           buckets=args.buckets,
                           source="warc" if args.warc else "parquet")
         q.awaitTermination()
-        try:
-            n = read_edges(spark, args.out).count()
-        except Exception:
-            # zero micro-batches fired (nothing in the input dir yet):
-            # the store was never created — that is a valid drain
-            n = 0
+        # no edges dir: zero micro-batches fired (nothing in the input
+        # dir yet), a valid drain. Any other read error is a broken
+        # store and fails the job. Checked through Hadoop's FileSystem,
+        # so --out may be any filesystem Spark writes to.
+        edges = spark._jvm.org.apache.hadoop.fs.Path(f"{args.out}/edges")
+        fs = edges.getFileSystem(spark._jsc.hadoopConfiguration())
+        n = read_edges(spark, args.out).count() if fs.exists(edges) else 0
         print(f"kg-construct done: {n} edges at {args.out} (streamed)")
         spark.stop()
         return

@@ -1,12 +1,16 @@
 """Public API facade — one import for everything the reference exposes.
 
 Document-level (pure Python, the reference's library surface):
-    expand, compact, flatten, to_rdf, normalize (json-ld->urdna2015),
-    parse_nquads / serialize_nquads, sign_jsonld / verify_jsonld
+    expand, compact, flatten, frame, to_rdf, from_rdf, normalize
+    (json-ld->urdna2015), canonize_quads / canonical_nquads,
+    parse_nquads / serialize_nquads, sign_jsonld / verify_jsonld,
+    extract_rdfa, extract_microdata, page_to_triples
 
-Cluster-level (Spark-first):
-    session, build_kg, extract_triples, read_nquads, write_nquads,
-    synthesize_pages, run_ingest
+Cluster-level (Spark-first, imported on first access): every name in
+``_SPARK_MODULES`` — the KG job (session, build_kg, extract_triples,
+the N-Quads, WARC and pages sources, run_ingest / run_ingest_kg), the
+JSON-LD document operators, and the curation, dedup, ANN, text-stats
+and sketch operators behind prep_corpus and the driver queries.
 
 Side effect on Spark's Python workers: every Arrow/pandas kernel behind
 the cluster-level names first calls ``operators.util.worker_runtime_tune``,
@@ -16,6 +20,8 @@ worker's path are affected (``pyspark.zip``, ``py4j-*.zip``, the
 spark-core jar): they are re-read when their (mtime, size) changes
 instead of on every task. Other archives keep stock invalidation.
 """
+
+from importlib import import_module
 
 from .core.compact import compact
 from .core.expand import expand
@@ -40,139 +46,62 @@ def normalize(document, *, base=None, remote_contexts=None,
         mode=mode)
 
 
-def _lazy_spark():
-    from .operators.extract import extract_triples
-    from .operators.jsonld_ops import (
-        compact_documents,
-        expand_documents,
-        flatten_documents,
-        normalize_documents,
-    )
-    from .operators.bpe import bpe_encode, bpe_token_count, train_bpe
-    from .operators.graph import connected_components, dedup_keepers
-    from .operators.langid import classify_text, lang_id_model
-    from .operators.similarity import (
-        brute_force_topk,
-        embedding_near_dup_lsh,
-        ivf_topk,
-        kmeans_centroids,
-        lsh_topk,
-    )
-    from .operators.pq import (
-        ivf_pq_topk,
-        pq_code_stats,
-        pq_encode,
-        pq_topk,
-    )
-    from .operators.skew import salted_agg
-    from .operators.urlnorm import canonical_url, dedup_by_canonical_url
-    from .operators.textstats import (
-        minhash_lsh_candidates,
-        ngram_jaccard_pairs,
-        redact_pii,
-        repetition_stats,
-        simhash,
-    )
-    from .operators.blockfilter import (
-        blocklist_annotate,
-        blocklist_filter,
-        blocklist_stats,
-    )
-    from .operators.decontam import (
-        contamination_stats,
-        decontaminate,
-        fuzzy_contamination,
-        fuzzy_decontaminate,
-    )
-    from .operators.lmscore import (
-        bigram_counts,
-        bigram_surprisal,
-        token_counts,
-        word_surprisal,
-    )
-    from .operators.pagerank import (
-        pagerank,
-        textrank_scores,
-        token_cooccurrence_edges,
-    )
-    from .operators.asof import asof_join
-    from .operators.quantiles import exact_quantiles
-    from .operators.sketch import (
-        cms_estimate,
-        cms_sketch,
-        hll_registers,
-        hll_summary,
-    )
-    from .operators.tfidf import term_scores, tfidf_topk
-    from .operators.mixture import (
-        epoch_upsample,
-        mixture_sample,
-        mixture_stats,
-        quota_sample,
-        split_corpus,
-    )
-    from .operators.packing import (
-        pack_greedy,
-        pack_offsets,
-        packing_stats,
-        shuffle_shards,
-    )
-    from .operators.paragraphs import paragraph_dedup, passage_counts
-    from .operators.spans import duplicate_spans, span_dedup
-    from .operators.unicode_norm import normalize_text
-    from .operators.textstats import quality_gate, quality_signals
-    from .plans.curation import prep_corpus
-    from .plans.kg import build_kg, session
-    from .sources.nquads_io import read_nquads, write_nquads
-    from .sources.pages import synthesize_pages
-    from .sources.warc import read_warc, read_warc_stream, write_warc
-    from .streaming.ingest import run_ingest, run_ingest_kg
-
-    return locals()
-
-
-# module constant so tests can pin _SPARK_API ⊆ __all__ (the drift the
-# facade docstring promises cannot happen — review r06e found 9 names
-# reachable via __getattr__ but missing from __all__)
-_SPARK_API = ("extract_triples", "build_kg", "session", "read_nquads",
-                 "write_nquads", "synthesize_pages", "run_ingest",
-                 "run_ingest_kg", "read_warc", "write_warc",
-                 "expand_documents", "compact_documents",
-                 "flatten_documents", "normalize_documents", "salted_agg",
-                 "brute_force_topk", "lsh_topk", "ivf_topk",
-                 "embedding_near_dup_lsh", "minhash_lsh_candidates",
-                 "ngram_jaccard_pairs", "simhash",
-                 "connected_components", "dedup_keepers",
-                 "canonical_url", "dedup_by_canonical_url",
-                 "lang_id_model", "classify_text",
-                 "bpe_token_count", "bpe_encode", "train_bpe",
-                 "repetition_stats", "redact_pii",
-                 "kmeans_centroids", "read_warc_stream",
-                 "pq_encode", "pq_topk", "pq_code_stats", "ivf_pq_topk",
-                 "paragraph_dedup", "passage_counts",
-                 "duplicate_spans", "span_dedup", "normalize_text",
-                 "quality_signals", "quality_gate",
-                 "contamination_stats", "decontaminate",
-                 "fuzzy_contamination", "fuzzy_decontaminate",
-                 "blocklist_annotate", "blocklist_filter",
-                 "blocklist_stats",
-                 "mixture_sample", "mixture_stats", "quota_sample",
-                 "epoch_upsample", "split_corpus",
-                 "shuffle_shards", "pack_offsets", "packing_stats",
-                 "pack_greedy", "token_counts", "word_surprisal",
-                 "bigram_counts", "bigram_surprisal",
-                 "term_scores", "tfidf_topk",
-                 "pagerank", "textrank_scores",
-                 "token_cooccurrence_edges",
-                 "hll_registers", "hll_summary", "exact_quantiles",
-                 "cms_sketch", "cms_estimate", "asof_join",
-                 "prep_corpus")
+# The one list of the cluster-level names, by defining module. They are
+# imported on first access, so importing the facade starts no Spark.
+_SPARK_MODULES = {
+    ".operators.extract": "extract_triples",
+    ".operators.jsonld_ops": "compact_documents expand_documents "
+                             "flatten_documents normalize_documents",
+    ".operators.bpe": "bpe_encode bpe_token_count train_bpe",
+    ".operators.graph": "connected_components dedup_keepers",
+    ".operators.langid": "classify_text lang_id_model",
+    ".operators.similarity": "brute_force_topk embedding_near_dup_lsh "
+                             "ivf_topk kmeans_centroids lsh_topk",
+    ".operators.pq": "ivf_pq_topk pq_code_stats pq_encode pq_topk",
+    ".operators.skew": "salted_agg",
+    ".operators.urlnorm": "canonical_url dedup_by_canonical_url",
+    ".operators.textstats": "minhash_lsh_candidates ngram_jaccard_pairs "
+                            "redact_pii repetition_stats simhash "
+                            "quality_gate quality_signals",
+    ".operators.blockfilter": "blocklist_annotate blocklist_filter "
+                              "blocklist_stats",
+    ".operators.decontam": "contamination_stats decontaminate "
+                           "fuzzy_contamination fuzzy_decontaminate",
+    ".operators.lmscore": "bigram_counts bigram_surprisal token_counts "
+                          "word_surprisal",
+    ".operators.pagerank": "pagerank textrank_scores "
+                           "token_cooccurrence_edges",
+    ".operators.asof": "asof_join",
+    ".operators.quantiles": "exact_quantiles",
+    ".operators.sketch": "cms_estimate cms_sketch hll_registers "
+                         "hll_summary",
+    ".operators.tfidf": "term_scores tfidf_topk",
+    ".operators.mixture": "epoch_upsample mixture_sample mixture_stats "
+                          "quota_sample split_corpus",
+    ".operators.packing": "pack_greedy pack_offsets packing_stats "
+                          "shuffle_shards",
+    ".operators.paragraphs": "paragraph_dedup passage_counts",
+    ".operators.spans": "duplicate_spans span_dedup",
+    ".operators.unicode_norm": "normalize_text",
+    ".plans.curation": "prep_corpus",
+    ".plans.kg": "build_kg session",
+    ".sources.nquads_io": "read_nquads write_nquads",
+    ".sources.pages": "synthesize_pages",
+    ".sources.warc": "read_warc read_warc_stream write_warc",
+    ".streaming.ingest": "run_ingest run_ingest_kg",
+}
+_SPARK_API = {name: module for module, names in _SPARK_MODULES.items()
+              for name in names.split()}
 
 
 def __getattr__(name):
     if name in _SPARK_API:
-        return _lazy_spark()[name]
+        return getattr(import_module(_SPARK_API[name], __package__), name)
     raise AttributeError(name)
+
+
+def _lazy_spark():
+    return {name: __getattr__(name) for name in _SPARK_API}
 
 
 __all__ = [
@@ -180,34 +109,5 @@ __all__ = [
     "normalize", "extract_rdfa", "extract_microdata",
     "canonize_quads", "canonical_nquads", "parse_nquads",
     "serialize_nquads", "sign_jsonld", "verify_jsonld", "page_to_triples",
-    "extract_triples", "build_kg", "session", "read_nquads",
-    "write_nquads", "synthesize_pages", "run_ingest", "run_ingest_kg",
-    "read_warc", "write_warc",
-    "expand_documents", "compact_documents", "flatten_documents",
-    "normalize_documents", "salted_agg",
-    "brute_force_topk", "lsh_topk", "ivf_topk", "embedding_near_dup_lsh",
-    "minhash_lsh_candidates", "ngram_jaccard_pairs", "simhash",
-    "connected_components", "dedup_keepers",
-    "canonical_url", "dedup_by_canonical_url",
-    "lang_id_model", "classify_text",
-    "bpe_token_count", "bpe_encode", "train_bpe",
-    "repetition_stats", "redact_pii",
-    "kmeans_centroids", "read_warc_stream",
-    "pq_encode", "pq_topk", "pq_code_stats", "ivf_pq_topk",
-    "paragraph_dedup", "passage_counts",
-    "duplicate_spans", "span_dedup", "normalize_text",
-    "quality_signals", "quality_gate",
-    "contamination_stats", "decontaminate",
-    "fuzzy_contamination", "fuzzy_decontaminate",
-    "blocklist_annotate", "blocklist_filter", "blocklist_stats",
-    "mixture_sample", "mixture_stats", "quota_sample",
-    "epoch_upsample", "split_corpus",
-    "shuffle_shards", "pack_offsets", "packing_stats",
-    "pack_greedy", "token_counts", "word_surprisal",
-    "bigram_counts", "bigram_surprisal",
-    "term_scores", "tfidf_topk",
-    "pagerank", "textrank_scores", "token_cooccurrence_edges",
-    "hll_registers", "hll_summary", "exact_quantiles",
-    "cms_sketch", "cms_estimate", "asof_join",
-    "prep_corpus",
+    *_SPARK_API,
 ]

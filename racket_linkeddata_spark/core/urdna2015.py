@@ -32,14 +32,6 @@ def _is_bnode(v: object) -> bool:
     return isinstance(v, str) and v.startswith("_:")
 
 
-def _sub(term, target: str):
-    """Substitute bnode labels with _:a / _:z for first-degree hashing
-    (spec 4.6 step 3.1; urdna2015.rkt:185-206)."""
-    if _is_bnode(term):
-        return "_:a" if term == target else "_:z"
-    return term
-
-
 class _State:
     """Canonicalization state. ``mode`` selects URDNA2015 (SHA-256; the
     algorithm the reference targets) or URGNA2012 (SHA-1, p/r positions,

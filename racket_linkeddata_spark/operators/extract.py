@@ -12,7 +12,6 @@ so resume/lineage still sees every processed url.
 
 from __future__ import annotations
 
-from typing import Optional
 
 from pyspark.sql import DataFrame
 
@@ -27,31 +26,12 @@ TRIPLES_SCHEMA = (
 _MARKER = (None,) * 8
 
 
-def extract_triples(
-    pages: DataFrame,
-    contexts_broadcast=None,
-    mode: str = "URDNA2015",
-    max_permutation_steps: int = 200_000,
-) -> DataFrame:
-    """pages(url, html, ...) -> triples DataFrame (TRIPLES_SCHEMA).
-
-    ``contexts_broadcast`` is an optional ``sc.broadcast(dict)`` of
-    pre-fetched remote context documents (the reference's pinned url-map
-    loader, json-ld.rkt:84-117) — executors never do network I/O.
-
-    This stage is Python-CPU-bound, so task count must track cores, not
-    input bytes: Spark's file-split packing (maxPartitionBytes=128MB)
-    happily puts a whole small corpus in ONE split and starves every other
-    worker (measured 30x). If the scan yields fewer partitions than
-    2x defaultParallelism, repartition up front — a cheap shuffle of
-    (url, html) only; at 100 TB the condition never triggers because
-    splits >> cores.
-    """
+def triples_kernel(contexts_broadcast=None, mode: str = "URDNA2015",
+                   max_permutation_steps: int = 200_000):
+    """The per-batch ``mapInPandas`` function over (url, html) batches:
+    the one copy of the extraction loop, shared by the batch stage
+    (extract_triples) and the streaming one (streaming.ingest)."""
     import pandas as pd
-
-    from .util import ensure_parallelism
-
-    pruned = ensure_parallelism(pages.select("url", "html"))
 
     def fn(batches):
         from .util import worker_runtime_tune
@@ -78,7 +58,35 @@ def extract_triples(
             else:
                 yield pd.DataFrame({c: [] for c in TRIPLE_COLUMNS})
 
-    return pruned.mapInPandas(fn, schema=TRIPLES_SCHEMA)
+    return fn
+
+
+def extract_triples(
+    pages: DataFrame,
+    contexts_broadcast=None,
+    mode: str = "URDNA2015",
+    max_permutation_steps: int = 200_000,
+) -> DataFrame:
+    """pages(url, html, ...) -> triples DataFrame (TRIPLES_SCHEMA).
+
+    ``contexts_broadcast`` is an optional ``sc.broadcast(dict)`` of
+    pre-fetched remote context documents (the reference's pinned url-map
+    loader, json-ld.rkt:84-117) — executors never do network I/O.
+
+    This stage is Python-CPU-bound, so task count must track cores, not
+    input bytes: Spark's file-split packing (maxPartitionBytes=128MB)
+    happily puts a whole small corpus in ONE split and starves every other
+    worker (measured 30x). If the scan yields fewer partitions than
+    2x defaultParallelism, repartition up front — a cheap shuffle of
+    (url, html) only; at 100 TB the condition never triggers because
+    splits >> cores.
+    """
+    from .util import ensure_parallelism
+
+    pruned = ensure_parallelism(pages.select("url", "html"))
+    return pruned.mapInPandas(
+        triples_kernel(contexts_broadcast, mode, max_permutation_steps),
+        schema=TRIPLES_SCHEMA)
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:

@@ -295,14 +295,6 @@ def _mins_table(docs: DataFrame, n: int, k: int) -> DataFrame:
     return docs.select("doc_id", F.explode(F.array(mins)).alias("mins"))
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, k: int = 16) -> DataFrame:
-    from .util import ensure_parallelism
-
-    m = _mins_table(ensure_parallelism(docs), n, k)
-    return m.select("doc_id", *[
-        F.element_at("mins", j + 1).alias(f"mh{j}") for j in range(k)])
-
-
 def lsh_collision_probability(s: float, bands: int, rows: int) -> float:
     """P(candidate | Jaccard similarity s) for banded MinHash-LSH:
     1 - (1 - s^rows)^bands — the S-curve every (bands, rows) choice
@@ -351,7 +343,6 @@ def lsh_plan(threshold: float, max_hashes: int = 64,
 
 def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
                            bands: int = 4,
-                           materialize: bool = True,
                            max_bucket: int = 512) -> DataFrame:
     """shingle -> minhash -> band -> bucket grouping: candidate near-dup
     pairs.
@@ -370,11 +361,9 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     cap are dropped entirely: they are non-discriminative (every member
     collides with everything) and at 100 TB would dominate the output.
     This cap is NOT silent — capped-bucket counts are observable via
-    lsh_bucket_stats(). ``materialize`` is kept for API compatibility;
-    the grouped design no longer needs it."""
+    lsh_bucket_stats()."""
     from .util import ensure_parallelism
 
-    del materialize  # no double evaluation to guard against anymore
     exploded = _lsh_band_table(ensure_parallelism(docs), n, k, bands)
     ids = F.array_sort(F.collect_list("doc_id"))
     grouped = (exploded.groupBy("band", "bucket")

@@ -36,8 +36,3 @@ def prefetch_contexts(
             raise JsonLdError("invalid remote context", url)
         out[url] = doc
     return out
-
-
-def broadcast_contexts(spark, contexts: Dict[str, Any]):
-    """sc.broadcast the pinned dict for extract_triples(contexts_broadcast=...)."""
-    return spark.sparkContext.broadcast(contexts)

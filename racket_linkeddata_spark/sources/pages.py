@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import datetime
 import json
-from typing import Iterator, Tuple
+from typing import Tuple
 
 EPOCH = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 LANGS = ("en", "de", "fr", "ja")
@@ -98,11 +98,6 @@ def synth_page(doc_id: int) -> Tuple[str, datetime.datetime, bytes, str, str]:
     html = (f"<html><head><title>p{doc_id}</title>{blocks}</head>"
             f"<body>{text}</body></html>").encode("utf-8")
     return url, ts, html, text, lang
-
-
-def iter_pages(start: int, end: int) -> Iterator[Tuple]:
-    for doc_id in range(start, end):
-        yield synth_page(doc_id)
 
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "

@@ -19,8 +19,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import TRIPLES_SCHEMA
-from ..core.pipeline import TRIPLE_COLUMNS, page_to_triples
+from ..operators.extract import TRIPLES_SCHEMA, triples_kernel
 
 
 def stream_pages(spark: SparkSession, pages_path: str,
@@ -49,29 +48,11 @@ def _source_stream(spark: SparkSession, pages_path: str,
 
 def stream_triples(pages_stream: DataFrame, contexts_broadcast=None,
                    mode: str = "URDNA2015") -> DataFrame:
-    """Streaming variant of operators.extract.extract_triples (no
-    repartition: streaming micro-batches already track file arrival)."""
-    import pandas as pd
-
-    def fn(batches):
-        ctxs = contexts_broadcast.value if contexts_broadcast is not None \
-            else None
-        marker = (None,) * 8
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                res = page_to_triples(url, html, ctxs, mode)
-                if res.rows:
-                    rows.extend(res.rows)
-                else:
-                    rows.append((url,) + marker + (res.status,))
-            if rows:
-                yield pd.DataFrame(dict(zip(TRIPLE_COLUMNS, zip(*rows))))
-            else:
-                yield pd.DataFrame({c: [] for c in TRIPLE_COLUMNS})
-
+    """Streaming variant of operators.extract.extract_triples: the same
+    kernel with no fan-out (micro-batches already track file arrival)."""
     return (pages_stream.select("url", "html")
-            .mapInPandas(fn, schema=TRIPLES_SCHEMA))
+            .mapInPandas(triples_kernel(contexts_broadcast, mode),
+                         schema=TRIPLES_SCHEMA))
 
 
 def run_ingest(spark: SparkSession, pages_path: str, out_path: str,

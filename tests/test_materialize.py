@@ -437,3 +437,27 @@ def test_kg_job_under_spark_submit_pyfiles(spark, tmp_path):
     assert "kg-construct done" in run.stdout
     edges = spark.read.parquet(f"{out}/edges")
     assert edges.count() > 0
+
+
+def test_kg_job_stream_fails_on_unreadable_store(tmp_path):
+    """An empty drain over an existing store whose edges hold a file
+    that is not parquet must fail the job: only a missing store counts
+    as 0 edges."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "kg"
+    bucket = out / "edges" / "snap=0" / "bucket=0"
+    bucket.mkdir(parents=True)
+    (bucket / "part-00000.parquet").write_bytes(b"not a parquet file")
+    empty = tmp_path / "emptywarcs"
+    empty.mkdir()
+    env = dict(os.environ, PYTHONPATH=root)
+    run = subprocess.run(
+        [sys.executable, os.path.join(root, "jobs", "kg_job.py"),
+         "--warc", str(empty), "--out", str(out), "--stream"],
+        env=env, capture_output=True, text=True, timeout=600)
+    assert run.returncode != 0, run.stdout[-2000:]
+    assert "0 edges" not in run.stdout

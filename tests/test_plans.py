@@ -441,6 +441,21 @@ def test_pq_plans_single_encode_stage(spark):
     assert "Join" not in p
 
 
+def test_ivf_topk_probe_is_broadcast_cell_join_no_dedup(spark):
+    """IVF-flat: the probe cells join the corpus assignment on the cell
+    id as a broadcast hash join, and no dedup aggregate sits between
+    that join and the top-k — cells partition the corpus, so (query,
+    item) candidates are unique by construction. The probe join's
+    ancestors are the plan lines above it."""
+    lines = _plan(em.q_ann_ivf_topk(spark, SF)).splitlines()
+    probe = [i for i, line in enumerate(lines)
+             if re.search(r"BroadcastHashJoin \[cell#\d+L\], \[cell#", line)]
+    assert len(probe) == 1, "\n".join(lines)
+    above = "\n".join(lines[:probe[0]])
+    assert "WindowGroupLimit" in above
+    assert "Aggregate" not in above, above
+
+
 def test_ivf_pq_plan_shape(spark):
     """IVF-PQ: the corpus encode is ONE opaque MapInPandas stage (a
     struct pandas_udf gets re-run below the parallelism exchange when
