@@ -1117,7 +1117,7 @@ def q_ann_lsh_topk(spark, sf_dir):
     from racket_linkeddata_spark.operators.similarity import lsh_topk
 
     e = _emb(spark, sf_dir)
-    return lsh_topk(e, e.filter(F.col("vec_id") < 5), k=5, dim=64)
+    return lsh_topk(e, e.filter(F.col("vec_id") < 5), k=5)
 
 
 def q_ann_ivf_topk(spark, sf_dir):

@@ -78,60 +78,58 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
 
     Hybrid execution (the broadcast-join logic applied to CC): verified
     near-dup PAIRS are orders of magnitude smaller than the corpus —
-    at 100 TB the pair set after exact verification is typically
-    millions, not billions. When the distinct edge count is below
-    ``driver_threshold`` (an explicit gate — logged, and reported via
-    ``stats_out`` when a dict is passed), union-find runs driver-side
-    in one pass: C-speed dict ops replace 2-4 iterative rounds of
-    3-join jobs whose per-round scheduling overhead dwarfs tiny data
-    (measured ~1.5-2 s/round). Above the gate, the distributed
-    pointer-jumping loop below handles arbitrarily large pair sets.
-    Pass ``driver_threshold=0`` to force the distributed path.
+    at 100 TB typically millions, not billions. The pairs as given are
+    collected once, bounded by ``limit(driver_threshold + 1)``, in ONE
+    Arrow toPandas transfer. When at most ``driver_threshold`` come
+    back (an explicit gate — logged, and reported via ``stats_out``),
+    union-find runs on them driver-side in one pass (it needs neither
+    both directions nor distinct edges): C-speed dict ops instead of
+    2-4 iterative rounds of 3-join jobs whose scheduling overhead
+    dwarfs tiny data (measured ~1.5-2 s/round). Above the gate, the
+    distributed pointer-jumping loop below handles any size; only it
+    builds the symmetric distinct edge table, reading the pairs a
+    second time (pin expensive pairs that may exceed the gate). Pass
+    ``driver_threshold=0`` to force it.
 
-    Driver memory at the gate: the edge list is pulled through ONE
-    Arrow toPandas transfer and held as a list of 2-tuples — ~100-150
-    bytes/edge for int ids (~250 MB at the 2M default, transiently ~2x
-    during the union-find dict build). Size driver heap accordingly or
-    lower the gate; the old Row-object collect cost several hundred
-    bytes/edge on top.
+    Driver memory at the gate: at most ``driver_threshold + 1`` pairs
+    as 2-tuples, ~100-150 bytes each for int ids (~250 MB at the 2M
+    default, transiently ~2x while union-find builds its dict).
 
     ``stats_out`` (optional dict) gets: ``path`` ("driver-union-find" |
-    "pointer-jumping"), ``probe_count`` (bounded edge-probe result),
-    and for the distributed path ``rounds`` (iterations run)."""
-    # pinned: the probe, then toPandas or every loop round, read it
+    "pointer-jumping"), ``probe_count`` (pairs the bounded collect
+    returned; None when the gate is disabled), and for the distributed
+    path ``rounds`` (iterations run)."""
+    if stats_out is None:
+        stats_out = {}
+    if driver_threshold > 0:
+        pdf = (pairs.select(a_col, b_col)
+               .limit(driver_threshold + 1).toPandas())
+        probe = len(pdf)
+        stats_out["probe_count"] = probe
+        if probe <= driver_threshold:
+            stats_out["path"] = "driver-union-find"
+            logger.info(
+                "connected_components: driver-union-find path "
+                "(probe=%d <= threshold=%d pairs)",
+                probe, driver_threshold)
+            rows = list(zip(pdf[a_col].tolist(), pdf[b_col].tolist()))
+            return _union_find_local(
+                rows, pairs.sparkSession, pairs.schema[a_col].dataType)
+        logger.info(
+            "connected_components: pointer-jumping path "
+            "(probe=%d > threshold=%d pairs)",
+            probe, driver_threshold)
+    else:
+        stats_out["probe_count"] = None
+        logger.info("connected_components: pointer-jumping path "
+                    "(driver_threshold=0, gate disabled)")
+    # pinned: every loop round reads it
     edges = (pairs.select(F.col(a_col).alias("src"),
                           F.col(b_col).alias("dst"))
              .unionByName(pairs.select(F.col(b_col).alias("src"),
                                        F.col(a_col).alias("dst")))
              .distinct()
              .localCheckpoint(eager=False))
-    if stats_out is None:
-        stats_out = {}
-    if driver_threshold > 0:
-        # limit(threshold+1).count() bounds the action: never a full
-        # count of a huge edge set just to decide the path
-        probe = edges.limit(driver_threshold + 1).count()
-        stats_out["probe_count"] = probe
-        if probe <= driver_threshold:
-            stats_out["path"] = "driver-union-find"
-            logger.info(
-                "connected_components: driver-union-find path "
-                "(probe=%d <= threshold=%d bidirectional edges)",
-                probe, driver_threshold)
-            # one Arrow transfer, tuples not Rows (memory note in the
-            # docstring)
-            pdf = edges.toPandas()
-            rows = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            return _union_find_local(
-                rows, pairs.sparkSession, pairs.schema[a_col].dataType)
-        logger.info(
-            "connected_components: pointer-jumping path "
-            "(probe=%d > threshold=%d bidirectional edges)",
-            probe, driver_threshold)
-    else:
-        stats_out["probe_count"] = None
-        logger.info("connected_components: pointer-jumping path "
-                    "(driver_threshold=0, gate disabled)")
     stats_out["path"] = "pointer-jumping"
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("label", F.col("id"))

@@ -222,7 +222,8 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.85,
     minhash_lsh_candidates), then ONE exact cosine pass over candidates
     only. Output = subset of embedding_cosine_pairs (recall < 1 by
     design; raise n_tables for recall, lower max_bucket for cost)."""
-    from .util import ensure_parallelism
+    from .textstats import _bucket_pairs
+    from .util import ensure_parallelism, parallelism_target
 
     src = embeddings.select(
         F.col(id_col).alias("id"),
@@ -233,33 +234,16 @@ def embedding_near_dup_lsh(embeddings: DataFrame, threshold: float = 0.85,
     e = ensure_parallelism(src)
     banded = e.select("id", F.posexplode(
         _srp_buckets_udf(n_planes, n_tables)(F.col("v")))
-        .alias("tbl", "bucket"))
-    ids = F.array_sort(F.collect_list("id"))
-    # ensure_parallelism on the GROUPED bucket table (bucket-count
-    # rows of sorted-id arrays — tiny), not on the exploded pairs:
-    # repartitioning here costs a bucket-sized exchange, after which
-    # the pair explode, the vector joins and the cosine verify are all
-    # map-side — the pair stream itself never crosses an exchange.
-    grouped = ensure_parallelism(
-        banded.groupBy("tbl", "bucket").agg(ids.alias("ids"))
-        .filter((F.size("ids") >= 2)
-                & (F.size("ids") <= max_bucket)))
-    pairs = F.flatten(F.transform(
-        F.col("ids"),
-        lambda x, i: F.transform(
-            F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    # deterministic hash repartition of the pair stream: an exchange
-    # (ids only — no payload) whose RUNTIME row count AQE feeds into
-    # the vector-join planning. Without it the static estimate calls
-    # the pair side "small" and BROADCASTS millions of pairs (BuildLeft
-    # — measured 43 s vs 10 s at sf1.0); unlike the old distinct this
-    # exchange carries no 7M-entry aggregate hash table.
-    from .util import parallelism_target
-    npart = parallelism_target(embeddings)
-    cand = (grouped.select(F.explode(pairs).alias("p"))
-            .select("p.id_a", "p.id_b")
-            .repartition(npart, "id_a", "id_b"))
+        .alias("band", "bucket"))
+    # fan_out on the GROUPED bucket table (tiny), not on the pairs.
+    # The hash repartition of the pair ids is an exchange whose RUNTIME
+    # row count AQE feeds into the vector-join planning: without it the
+    # static estimate calls the pair side "small" and BROADCASTS
+    # millions of pairs (measured 43 s vs 10 s at sf1.0), and unlike a
+    # distinct it holds no aggregate hash table.
+    cand = (_bucket_pairs(banded, "id", "id_a", "id_b", max_bucket,
+                          fan_out=True)
+            .repartition(parallelism_target(embeddings), "id_a", "id_b"))
     va = src.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     vb = src.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     # cosine_arrow: the verify pass runs over EVERY candidate pair
@@ -484,9 +468,12 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, *,
     corpus = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("item_id"),
         F.col(vec_col).cast("array<double>").alias("cv"))
-    assign = corpus.select(
-        "item_id",
-        F.element_at(_cells_udf(1)(F.col("cv")), 1).alias("cell"))
+    # the cell assignment rides an explode(array(udf)) Generate
+    # barrier: the join's inferred isnotnull(cell) filter cannot sink
+    # through it, so the kernel runs once, above the fan-out exchange
+    cells = F.explode(F.array(_cells_udf(1)(F.col("cv")))).alias("cells")
+    assign = (corpus.select("item_id", cells)
+              .select("item_id", F.element_at("cells", 1).alias("cell")))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"))
@@ -510,7 +497,6 @@ def ivf_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5, *,
 
 def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
              n_planes: int = 4, n_tables: int = 16,
-             dim: Optional[int] = None,
              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Approximate top-k via multi-table sign-random-projection LSH:
     ``n_tables`` independent sets of ``n_planes`` hyperplanes; a corpus
@@ -520,33 +506,28 @@ def lsh_topk(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     knobs. Exactness is not the contract (brute_force_topk is)."""
     from pyspark.sql.window import Window
 
-    # ``dim`` is optional and purely advisory: the hyperplane matrix is
-    # derived DETERMINISTICALLY from the observed vector length inside the
-    # UDF (same _hyperplanes stream on every worker), so no driver-side
-    # action (.first()) is ever triggered building this operator — plan
-    # construction is action-free. All (n_tables x n_planes) projections
-    # happen in ONE Arrow-batched numpy matmul — 64 interpreted
-    # aggregate() expressions measured ~10x slower.
-    del dim
-    buckets_udf = _srp_buckets_udf(n_planes, n_tables)
-
-    def buckets_col(vec):
-        return buckets_udf(vec)
-
     from .util import ensure_parallelism
 
+    # The hyperplane matrix is derived DETERMINISTICALLY from the
+    # observed vector length inside the UDF (same _hyperplanes stream on
+    # every worker), so no driver-side action (.first()) is ever
+    # triggered building this operator — plan construction is
+    # action-free. All (n_tables x n_planes) projections happen in ONE
+    # Arrow-batched numpy matmul — 64 interpreted aggregate()
+    # expressions measured ~10x slower.
+    buckets_udf = _srp_buckets_udf(n_planes, n_tables)
     corpus = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("item_id"),
         F.col(vec_col).cast("array<double>").alias("cv"))
     c_buckets = corpus.select(
         "item_id",
-        F.posexplode(buckets_col(F.col("cv"))).alias("tbl", "bucket"))
+        F.posexplode(buckets_udf(F.col("cv"))).alias("tbl", "bucket"))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"))
     q_buckets = q.select(
         "query_id",
-        F.posexplode(buckets_col(F.col("qv"))).alias("tbl", "bucket"))
+        F.posexplode(buckets_udf(F.col("qv"))).alias("tbl", "bucket"))
 
     # candidate dedup carries IDS ONLY — an item matching a query in
     # several tables would otherwise shuffle its full vector once per

@@ -365,20 +365,32 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     from .util import ensure_parallelism
 
     exploded = _lsh_band_table(ensure_parallelism(docs), n, k, bands)
-    ids = F.array_sort(F.collect_list("doc_id"))
-    grouped = (exploded.groupBy("band", "bucket")
-               .agg(ids.alias("ids"))
-               .filter((F.size("ids") >= 2)
-                       & (F.size("ids") <= max_bucket)))
-    # pairs within the sorted array: ids[i] x ids[j] for j > i
+    return _bucket_pairs(exploded, "doc_id", "doc_a", "doc_b",
+                         max_bucket).distinct()
+
+
+def _bucket_pairs(banded: DataFrame, id_col: str, a_col: str, b_col: str,
+                  max_bucket: int, fan_out: bool = False) -> DataFrame:
+    """(a_col, b_col) pairs of ids sharing a (band, bucket) of
+    ``banded`` (id_col, band, bucket): the pair generator of both LSH
+    families (see minhash_lsh_candidates). Pairs sharing several
+    buckets repeat. ``fan_out`` spreads the grouped table (one row per
+    bucket) before the pair explode."""
+    from .util import ensure_parallelism
+
+    ids = F.col("ids")
+    grouped = (banded.groupBy("band", "bucket")
+               .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+               .filter((F.size(ids) >= 2) & (F.size(ids) <= max_bucket)))
+    if fan_out:
+        grouped = ensure_parallelism(grouped)
     pairs = F.flatten(F.transform(
-        F.col("ids"),
+        ids,
         lambda x, i: F.transform(
-            F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-            lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")))))
+            F.slice(ids, i + F.lit(2), F.size(ids)),
+            lambda y: F.struct(x.alias(a_col), y.alias(b_col)))))
     return (grouped.select(F.explode(pairs).alias("p"))
-            .select("p.doc_a", "p.doc_b")
-            .distinct())
+            .select(f"p.{a_col}", f"p.{b_col}"))
 
 
 def _lsh_band_table(docs: DataFrame, n: int, k: int, bands: int) -> DataFrame:
@@ -438,29 +450,26 @@ def near_dup_pairs(docs: DataFrame,
     curation plan and the text-dedup driver query.
 
     Only candidate documents are shingled (candidates << corpus at
-    scale), and they are fanned out BEFORE the shingle kernel: the
-    candidate-doc join is small, so AQE would run the kernel in one
-    task. It is a semi join so that its size estimate is the docs
-    side's; an inner join's is the product of both sides'. The
-    candidate pairs and the shingles are each read twice, so both are
-    pinned with localCheckpoint."""
-    from .util import ensure_parallelism, parallel_checkpoint
-
+    scale): a left_semi join keeps them, and the shingle kernel runs
+    above it once per join side, in the query that verifies. The
+    candidate pairs are read three times, so they are pinned (lazily).
+    The verify is ONE predicate: split into two filters, Catalyst
+    pushes the ``size(sh_a) > 0`` conjunct through the joins and the
+    semi join, and the shingle kernel runs over every document."""
     cand = minhash_lsh_candidates(docs, n=3, k=16,
                                   bands=4).localCheckpoint(eager=False)
     cand_ids = (cand.select(F.col("doc_a").alias("doc_id"))
                 .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
                 .distinct())
-    cd = ensure_parallelism(docs.join(cand_ids, "doc_id", "left_semi"))
-    sh = parallel_checkpoint(
-        cd.select("doc_id", shingles_arrow(3)(F.col("text")).alias("sh")))
+    sh = (docs.join(cand_ids, "doc_id", "left_semi")
+          .select("doc_id", shingles_arrow(3)(F.col("text")).alias("sh")))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     jac = (F.size(F.array_intersect("sh_a", "sh_b"))
            / F.size(F.array_union("sh_a", "sh_b")))
     return (cand.join(a, "doc_a").join(b, "doc_b")
-            .filter(F.size("sh_a") > 0)
-            .filter(F.round(jac, 4) >= jaccard_threshold)
+            .filter(F.when(F.size("sh_a") > 0, F.round(jac, 4)
+                           >= jaccard_threshold).otherwise(False))
             .select("doc_a", "doc_b"))
 
 

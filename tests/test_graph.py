@@ -48,7 +48,7 @@ def test_components_stats_and_log_on_both_paths(spark, caplog):
         connected_components(pairs, driver_threshold=2_000_000,
                              stats_out=stats).collect()
         assert stats["path"] == "driver-union-find"
-        assert stats["probe_count"] == 6  # 3 pairs, bidirectional
+        assert stats["probe_count"] == 3  # the pairs collected
         assert any("driver-union-find" in r.message for r in caplog.records)
 
         caplog.clear()
@@ -58,6 +58,23 @@ def test_components_stats_and_log_on_both_paths(spark, caplog):
         assert stats["path"] == "pointer-jumping"
         assert stats["rounds"] >= 1
         assert any("pointer-jumping" in r.message for r in caplog.records)
+
+
+def test_driver_path_is_one_bounded_collect(spark):
+    """Below the gate the whole call is one job: the pairs as given,
+    collected once under a limit. No edge pin, no size probe."""
+    from test_parallelism import _jobs_launched
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (2, 1)], "doc_a long, doc_b long")
+    stats = {}
+    comp, n_jobs = _jobs_launched(
+        spark, "cc-driver-path",
+        lambda: connected_components(pairs, stats_out=stats))
+    assert stats == {"path": "driver-union-find", "probe_count": 4}
+    assert n_jobs == 1
+    assert sorted(map(tuple, comp.collect())) == [
+        (1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
 
 
 def test_dedup_keepers_keeps_min_per_cluster(spark):

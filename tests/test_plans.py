@@ -22,6 +22,19 @@ def _final_plan(df) -> str:
     return _plan(df).split("== Initial Plan ==")[0]
 
 
+def _subtree(lines, i) -> str:
+    """The plan lines of node ``i``'s subtree (it and everything it
+    reads), from the indentation of a plan's tree string."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return "\n".join(out)
+
+
 def _new_sql_plans(spark, fn):
     """(fn(), the plans of the SQL executions fn ran), from the status
     store. A localCheckpoint is one of them: the consuming plan shows
@@ -111,6 +124,35 @@ def test_embedding_lsh_no_cross_product(spark):
     p = _plan(embedding_near_dup_lsh(e))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
+
+
+def test_near_dup_verify_shingles_candidates_in_one_query(spark):
+    """near_dup_pairs: the minhash kernel runs once, in the candidate
+    pin; the verify query shingles the candidate docs once per join
+    side, each above the LeftSemi join that keeps them. Two separate
+    filters instead of the one verify predicate let Catalyst push
+    size(sh_a) > 0 below the semi join: the kernel then ran over every
+    document (6 evaluations)."""
+    from racket_linkeddata_spark.operators.textstats import near_dup_pairs
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+
+    def run():
+        df = near_dup_pairs(docs)
+        df.collect()
+        return df
+
+    df, made = _new_sql_plans(spark, run)
+    lines = _plan(df).split("== Initial Plan ==")[0].splitlines()
+    sh = [i for i, line in enumerate(lines)
+          if "ArrowEvalPython [sh_udf" in line]
+    assert len(sh) == 2, "\n".join(lines)
+    for i in sh:
+        assert "LeftSemi" in _subtree(lines, i), "\n".join(lines)
+    assert "mins_udf" not in "\n".join(lines)
+    [pin] = [m for m in made if "mins_udf" in m]
+    ran = pin.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert ran.count("ArrowEvalPython") == 1, pin[:1500]
 
 
 def test_minhash_tree_evaluated_exactly_once(spark):
@@ -454,6 +496,20 @@ def test_ivf_topk_probe_is_broadcast_cell_join_no_dedup(spark):
     above = "\n".join(lines[:probe[0]])
     assert "WindowGroupLimit" in above
     assert "Aggregate" not in above, above
+
+
+def test_ivf_topk_assigns_corpus_cells_once_above_the_fan_out(spark):
+    """The corpus cell assignment runs once per vector, after the
+    fan-out exchange: the join's inferred isnotnull(cell) filter must
+    not sink below the exchange and run the kernel a second time
+    there."""
+    lines = _final_plan(em.q_ann_ivf_topk(spark, SF)).splitlines()
+    corpus = [i for i, line in enumerate(lines)
+              if "ArrowEvalPython [cells(" in line and "qv#" not in line]
+    assert len(corpus) == 1, "\n".join(lines)
+    below = _subtree(lines, corpus[0])
+    assert "Exchange RoundRobinPartitioning" in below, below
+    assert below.count("ArrowEvalPython") == 1, below
 
 
 def test_ivf_pq_plan_shape(spark):

@@ -17,7 +17,7 @@ def test_lsh_recall_vs_brute_force(spark):
              for r in brute_force_topk(e, q, k=5).collect()}
     # multi-table SRP at defaults (4 planes x 16 tables): measured ~0.89
     approx = {(r.query_id, r.item_id)
-              for r in lsh_topk(e, q, k=5, dim=64).collect()}
+              for r in lsh_topk(e, q, k=5).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.7, f"recall {recall}"
     assert len(approx) <= len(exact)
@@ -132,7 +132,7 @@ def test_brute_force_topk_ranks_correctly(spark):
 
 
 def test_lsh_topk_plan_construction_is_action_free(spark):
-    """Building the lsh_topk plan (dim omitted) must trigger ZERO Spark
+    """Building the lsh_topk plan must trigger ZERO Spark
     jobs — round 1 inferred dim via .first(), a driver action inside the
     operator (judge 'what's wrong' #4)."""
     from racket_linkeddata_spark.operators.similarity import lsh_topk
@@ -140,7 +140,7 @@ def test_lsh_topk_plan_construction_is_action_free(spark):
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    df = lsh_topk(e, e.limit(3), k=3)  # no dim, no action expected
+    df = lsh_topk(e, e.limit(3), k=3)  # no action expected
     _ = df.schema  # forces analysis, still no job
     after = set(tracker.getJobIdsForGroup(None))
     assert after == before, f"plan construction ran jobs: {after - before}"

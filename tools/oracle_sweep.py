@@ -3,16 +3,20 @@
 entry vs its oracle_sql() on DuckDB) at ANY scale factor — the pytest
 suite pins sf0.01; this sweeps the others:
 
-    PYTHONPATH=/root/repo python tools/oracle_sweep.py \
-        --sf-dir /root/testdata/sf0.1 [--cpus 16] [--only name ...]
+    python tools/oracle_sweep.py --sf-dir <sf dir> [--cpus N] \
+        [--only 'dedup_*' ann_lsh_topk ...]
 
-Round-5 result: all 45 queries value-exact at sf0.001, sf0.01 AND
-sf0.1 (no size assumptions anywhere). Prints one JSON line.
+``--only`` takes shell-style patterns (fnmatch); a pattern that matches
+no query is an error. ``--cpus`` defaults to the machine's CPU count.
+
+Every query is value-exact at sf0.001, sf0.01 and sf0.1 (no size
+assumptions anywhere). Prints one JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
+import fnmatch
 import importlib.util
 import json
 import math
@@ -43,8 +47,8 @@ def main():
 
     p = argparse.ArgumentParser()
     p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    p.add_argument("--cpus", type=int, default=16)
-    p.add_argument("--only", nargs="*")
+    p.add_argument("--cpus", type=int, default=os.cpu_count())
+    p.add_argument("--only", nargs="*", metavar="PATTERN")
     args = p.parse_args()
 
     spec = importlib.util.spec_from_file_location(
@@ -52,14 +56,21 @@ def main():
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
 
+    oracles = m.oracle_sql()
+    names = sorted(oracles)
+    if args.only:
+        unmatched = [pat for pat in args.only
+                     if not fnmatch.filter(names, pat)]
+        if unmatched:
+            p.error("--only: no query matches " + " ".join(unmatched))
+        names = [n for n in names
+                 if any(fnmatch.fnmatchcase(n, pat) for pat in args.only)]
+
     spark = session("oracle-sweep", cpus=args.cpus)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"'{args.sf_dir}/{t}.parquet'")
-
-    oracles = m.oracle_sql()
-    names = args.only or sorted(oracles)
     bad, ok = [], 0
     for name in names:
         try:
