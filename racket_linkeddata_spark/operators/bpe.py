@@ -117,18 +117,12 @@ def train_bpe(texts: Iterable[str], n_merges: int) -> List[Tuple[str, str]]:
     return merges
 
 
-def bpe_token_count(docs: DataFrame, merges: Merges,
-                    text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, n_tokens): BPE token count per document — the document
-    pricing op. Map-only Arrow-batched UDF; distinct pretokens are
-    encoded once per batch (Zipf cache)."""
-    from .util import ensure_parallelism
-
+def bpe_count_udf(merges: Merges):
+    """bpe_token_count's kernel as a column function: text -> bigint."""
     ranks = {tuple(m): i for i, m in enumerate(merges)}
 
     @F.pandas_udf("bigint")
-    def udf(texts: pd.Series) -> pd.Series:
+    def bpe_udf(texts: pd.Series) -> pd.Series:
         from .util import worker_runtime_tune
         worker_runtime_tune()
         cache: Dict[str, int] = {}
@@ -146,7 +140,17 @@ def bpe_token_count(docs: DataFrame, merges: Merges,
             return total
 
         return pd.Series([count(t) for t in texts], dtype="int64")
+    return bpe_udf
+
+
+def bpe_token_count(docs: DataFrame, merges: Merges,
+                    text_col: str = "text",
+                    id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, n_tokens): BPE token count per document — the document
+    pricing op. Map-only Arrow-batched UDF; distinct pretokens are
+    encoded once per batch (Zipf cache)."""
+    from .util import ensure_parallelism
 
     d = ensure_parallelism(docs)
     return d.select(F.col(id_col),
-                    udf(F.col(text_col)).alias("n_tokens"))
+                    bpe_count_udf(merges)(F.col(text_col)).alias("n_tokens"))

@@ -499,6 +499,19 @@ def classify_text(text: str,
     return _classify(text, langs, index, sample_chars)
 
 
+def lang_id_udf(sample_chars: int = SAMPLE_CHARS):
+    """lang_id_model's kernel as a column function: text -> struct."""
+    langs, index = _default_model()
+
+    @F.pandas_udf("struct<lang:string, lang_score:bigint>")
+    def lang_udf(texts: pd.Series) -> pd.DataFrame:
+        from .util import worker_runtime_tune
+        worker_runtime_tune()
+        out = [_classify(t, langs, index, sample_chars) for t in texts]
+        return pd.DataFrame(out, columns=["lang", "lang_score"])
+    return lang_udf
+
+
 def lang_id_model(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id",
                   sample_chars: int = SAMPLE_CHARS) -> DataFrame:
@@ -511,16 +524,8 @@ def lang_id_model(docs: DataFrame, text_col: str = "text",
     cost is one pass over the sampled prefix of each document."""
     from .util import ensure_parallelism
 
-    langs, index = _default_model()
-
-    @F.pandas_udf("struct<lang:string, lang_score:bigint>")
-    def udf(texts: pd.Series) -> pd.DataFrame:
-        from .util import worker_runtime_tune
-        worker_runtime_tune()
-        out = [_classify(t, langs, index, sample_chars) for t in texts]
-        return pd.DataFrame(out, columns=["lang", "lang_score"])
-
     d = ensure_parallelism(docs)
-    res = d.select(F.col(id_col), udf(F.col(text_col)).alias("r"))
+    res = d.select(F.col(id_col),
+                   lang_id_udf(sample_chars)(F.col(text_col)).alias("r"))
     return res.select(id_col, F.col("r.lang").alias("lang"),
                       F.col("r.lang_score").alias("lang_score"))

@@ -10,11 +10,11 @@ spark-submit CLI (``jobs/prep_job.py``):
      2. near-dup dedup: MinHash-LSH candidates -> exact Jaccard verify
         on candidate-only shingles -> connected components; each
         cluster keeps its minimum id, the other ids are dropped;
-  B. per-document work:
-     3. quality gate (full C4/Gopher signal set, fixed-point);
+  B. per-document work, map-only but for decontamination's anti join:
+     3. quality gate, a row filter (C4/Gopher signals, fixed-point);
      4. benchmark decontamination (optional — broadcast gram probe);
      5. deterministic mixture sampling (optional recipe);
-     6. annotate: language + BPE token price, pinned eagerly;
+     6. annotate language + BPE token price in one projection, pinned;
   and once both have finished, B's rows left-anti-joined to A's ids.
 
 The branches read nothing of each other. Every step of B keeps or
@@ -28,9 +28,9 @@ overlap A's instead of waiting for them. The anti join reads only the
 losers (the dropped ids of dedup_keepers' verdicts); a semi join to the
 keepers would first rejoin every survivor id to the clusters.
 
-Every stage is the corresponding operator module; this file only
-composes them and pins the twice-consumed intermediates (the
-self-join-over-expensive-trees gotcha).
+Every stage is an operator module's (stage 6 calls the langid and BPE
+kernels as column functions); this file composes them and pins the
+twice-consumed intermediates (the self-join-over-expensive-trees gotcha).
 """
 
 from __future__ import annotations
@@ -54,11 +54,11 @@ def prep_corpus(docs: DataFrame, *,
     enables per-source subsampling; ``merges`` is the BPE merge table
     for pricing (default: the tiny closed-form pair). Runs as two
     concurrent branches joined once at the end (module docstring)."""
-    from racket_linkeddata_spark.operators.bpe import bpe_token_count
+    from racket_linkeddata_spark.operators.bpe import bpe_count_udf
     from racket_linkeddata_spark.operators.decontam import decontaminate
     from racket_linkeddata_spark.operators.graph import (
         connected_components)
-    from racket_linkeddata_spark.operators.langid import lang_id_model
+    from racket_linkeddata_spark.operators.langid import lang_id_udf
     from racket_linkeddata_spark.operators.mixture import mixture_sample
     from racket_linkeddata_spark.operators.textstats import (
         near_dup_pairs, quality_gate)
@@ -101,9 +101,9 @@ def prep_corpus(docs: DataFrame, *,
     qk.update(quality_kwargs or {})
 
     def annotated() -> DataFrame:
-        # branch B, stage 3: the composed quality gate (full signal
-        # set; fixed-point). Pinned: consumed twice by decontaminate
-        # (gram explode + the survivor anti-join)
+        # branch B, stage 3: the quality gate, a row filter. Pinned:
+        # read twice by decontaminate (gram explode + anti-join); its
+        # plan is narrow over surv, so the pin materializes once
         gated = parallel_checkpoint(quality_gate(
             surv.select("doc_id", "text", "source"), **qk))
 
@@ -111,20 +111,20 @@ def prep_corpus(docs: DataFrame, *,
         clean = decontaminate(gated, benchmark, n=decontam_n) \
             if benchmark is not None else gated
 
-        # stage 5: deterministic mixture sampling; pinned: stage 6 fans
-        # it out to three branches
+        # stage 5: deterministic mixture sampling. Pinned to fan out
+        # the one partition decontaminate's anti join lands in
         mixed = mixture_sample(clean, mixture_weights,
                                default_weight=default_weight) \
             if mixture_weights else clean
         mixed = parallel_checkpoint(mixed)
 
-        # stage 6: annotate survivors — both map-only ops. Pinned
-        # eagerly, so that the annotation runs on this branch's thread
-        # rather than in the caller's final job.
-        lang = lang_id_model(mixed).select("doc_id", "lang")
-        bpe = bpe_token_count(mixed, merges or [("t", "h"), ("th", "e")])
-        return (mixed.select("doc_id").join(lang, "doc_id")
-                .join(bpe, "doc_id").localCheckpoint(eager=True))
+        # stage 6: annotate survivors in one projection of the row's
+        # text. Pinned eagerly, so that the annotation runs on this
+        # branch's thread rather than in the caller's final job.
+        bpe = bpe_count_udf(merges or [("t", "h"), ("th", "e")])
+        return mixed.select(
+            "doc_id", lang_id_udf()(F.col("text"))["lang"].alias("lang"),
+            bpe(F.col("text")).alias("n_tokens")).localCheckpoint(eager=True)
 
     drop, ann = concurrently(dropped, annotated)
     return ann.join(drop, "doc_id", "left_anti")

@@ -240,6 +240,33 @@ def test_quality_signals_pure_jvm_map_only(spark):
         assert node not in p, (node, p[:500])
 
 
+def test_quality_gate_is_one_filter_on_the_row(spark):
+    """quality_gate is one Filter over its input: nothing joins back on
+    doc_id (a join to the passing ids would hash every id), and no
+    Generate holds the signal struct (a generator's fields get no
+    subexpression elimination, so every signal re-splits the text)."""
+    from racket_linkeddata_spark.operators.textstats import quality_gate
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    p = quality_gate(docs)._jdf.queryExecution().optimizedPlan().toString()
+    assert p.startswith("Filter ") and "split(" in p.splitlines()[0], p
+    for node in ("Join", "Generate", "Project", "Aggregate"):
+        assert node not in p, (node, p)
+
+
+def test_prep_annotation_is_one_projection(spark):
+    """prep_corpus stage 6, the eager pin that ends branch B, annotates
+    in one projection of the row's text: no join back on doc_id, and
+    one ArrowEvalPython node evaluates the lang and the BPE kernel once
+    each."""
+    _, made = _new_sql_plans(
+        spark, lambda: em.q_training_data_prep(spark, SF))
+    [ann] = [m for m in made if "lang_udf" in m]
+    assert "Join" not in ann, ann
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", ann, re.M)) == 1, ann
+    assert ann.count("lang_udf(") == 1 and ann.count("bpe_udf(") == 1, ann
+
+
 def test_paragraph_dedup_plan_shape(spark):
     """paragraph_dedup at 100 TB: the hot-passage set rides a BROADCAST
     left-anti join (not a shuffle join) in the common small-hot-set

@@ -73,6 +73,30 @@ def test_gate_composes_all_signals(spark):
     assert set(out.columns) == {"doc_id", "text"}
 
 
+def test_gate_decides_each_row_not_each_id(spark):
+    """A row filter, not a join back on doc_id: a passing row with a
+    NULL id is kept, and a failing row that shares its id with a
+    passing row is dropped. The output keeps the input's columns in
+    the input's order, a column whose name differs from the gate's
+    working column only in case included (Spark resolves names
+    case-insensitively)."""
+    good = "the quick brown fox jumps over the lazy dog"
+    d = spark.createDataFrame(
+        [(1, good, "a"), (2, good, "b"), (2, "x", "c"), (None, good, "d")],
+        "doc_id long, text string, _Signals string")
+    out = quality_gate(d.select("text", "doc_id", "_Signals"),
+                       min_tokens=2, max_tokens=100,
+                       min_mean_word_len_x1000=1000,
+                       max_mean_word_len_x1000=20_000, min_stopwords=1,
+                       max_symbol_x1000=100, max_bullet_x1000=500,
+                       max_ellipsis_x1000=300)
+    assert sorted((r["doc_id"] is None, r["doc_id"] or 0, r["text"])
+                  for r in out.collect()) == [
+        (False, 1, good), (False, 2, good), (True, 0, good)]
+    assert out.columns == ["text", "doc_id", "_Signals"]
+    assert sorted(r["_Signals"] for r in out.collect()) == ["a", "b", "d"]
+
+
 def test_mean_line_len_and_word_len(spark):
     d = spark.createDataFrame(
         [(0, "abcd efgh\nij"), (1, "aa bb")],

@@ -1,9 +1,14 @@
 """URDNA2015 checks that need no fixture files: a hand-checked
-canonical form, the permutation budget on a bnode clique, and the
-defining properties over generated datasets of 1-7 blank nodes (the
-canonical form ignores bnode labels and quad order, and is a fixed
-point), automorphic shapes included: rings, cliques, two isomorphic
-disjoint cycles, bnodes used as graph names."""
+canonical form, one derived step by step from the spec's hash formulas
+(it needs Hash N-Degree Quads to break a first-degree tie), the
+permutation budget, and the defining properties over generated datasets
+of 1-7 blank nodes (the canonical form ignores bnode labels and quad
+order, is a fixed point, and two datasets share it iff a bnode
+bijection maps one onto the other), automorphic shapes included: rings,
+cliques, two isomorphic disjoint cycles, bnodes used as graph names."""
+
+import hashlib
+from itertools import permutations
 
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -36,6 +41,36 @@ def test_permutation_budget():
                 quads.append(Quad(f"_:a{i}", "http://ex/p", f"_:a{j}"))
     with pytest.raises(CanonicalizationBudgetExceeded):
         canonical_nquads(quads, max_permutation_steps=50)
+
+
+def test_n_degree_tie_break_follows_the_spec_hashes():
+    """_:a and _:c have equal first-degree hashes; only Hash N-Degree
+    Quads (spec 4.8) orders them, through their related nodes' canonical
+    ids. The expected labels are computed here from the spec's
+    formulas, not from the implementation."""
+    p, q = "http://ex/p", "http://ex/q"
+    quads = [Quad("_:a", p, "_:b"), Quad("_:c", p, "_:d"),
+             Quad("_:b", q, Literal("1")), Quad("_:d", q, Literal("7"))]
+
+    def sha(s):
+        return hashlib.sha256(s.encode()).hexdigest()
+
+    # 4.6: first-degree hashes over the sorted lines; _:b and _:d
+    # are unique and issued in hash order
+    fd = {"_:b": sha(f'_:a <{q}> "1" .\n_:z <{p}> _:a .\n'),
+          "_:d": sha(f'_:a <{q}> "7" .\n_:z <{p}> _:a .\n')}
+    canon = {x: f"_:c14n{i}" for i, x in enumerate(sorted(fd, key=fd.get))}
+    # 4.7 + 4.8: one related node, already canonical, in position "o";
+    # the n-degree hash is over (related hash + path)
+    nd = {x: sha(sha(f"o<{p}>{canon[r]}") + canon[r])
+          for x, r in (("_:a", "_:b"), ("_:c", "_:d"))}
+    for i, x in enumerate(sorted(nd, key=nd.get)):
+        canon[x] = f"_:c14n{i + 2}"
+    want = "".join(sorted(
+        f"{canon[x.subj]} <{x.pred}> " + (
+            canon[x.obj] if isinstance(x.obj, str)
+            else f'"{x.obj.value}"') + " .\n" for x in quads))
+    assert canonical_nquads(quads) == want
 
 
 # fixed examples: the floor must not change verdict from run to run
@@ -103,3 +138,79 @@ def test_canonical_form_ignores_bnode_labels_and_quad_order(quads, data):
 def test_canonical_form_is_a_fixed_point(quads):
     once = canonical_nquads(quads)
     assert canonical_nquads(parse(once)) == once
+
+
+def _bnodes(quads):
+    return sorted({t for q in quads for t in (q.subj, q.obj, q.graph)
+                   if isinstance(t, str) and t.startswith("_:")})
+
+
+def _isomorphic(a, b):
+    """Brute force: some bijection of a's bnodes onto b's maps the set
+    ``a`` onto the set ``b`` (at most 7! = 5040 candidates)."""
+    ba, bb, want = _bnodes(a), _bnodes(b), set(b)
+    if len(ba) != len(bb) or len(set(a)) != len(want):
+        return False
+    return any(set(_relabel(a, dict(zip(ba, perm)))) == want
+               for perm in permutations(bb))
+
+
+@st.composite
+def _pairs(draw):
+    """Two datasets over at most 7 bnodes (the brute-force cap): a copy
+    of the first, the first with one object changed, a ring against
+    cycles over the same bnodes (equal first-degree hashes, different
+    shape), or an unrelated one. The second gets fresh labels and a
+    fresh quad order."""
+    a = draw(_datasets())
+    how = draw(st.sampled_from(["copy", "edit", "twin", "fresh"]))
+    if how == "copy":
+        b = list(a)
+    elif how == "edit":
+        i = draw(st.integers(0, len(a) - 1))
+        obj = draw(st.sampled_from(_bnodes(a) + _IRIS + _LITS))
+        b = list(dict.fromkeys(a[:i] + [a[i]._replace(obj=obj)] + a[i + 1:]))
+    elif how == "twin":
+        n = draw(st.integers(2, 7))
+        k = draw(st.integers(1, n - 1))
+        nodes = [f"_:n{i}" for i in range(n)]
+        a = _ring(nodes)
+        b = _ring(nodes[:k]) + _ring(nodes[k:])
+    else:
+        b = draw(_datasets())
+    names = {x: f"_:f{i}" for i, x in enumerate(
+        draw(st.permutations(_bnodes(b))))}
+    return a, draw(st.permutations(_relabel(b, names)))
+
+
+@settings(**_PROPS)
+@given(_pairs())
+def test_equal_canonical_forms_iff_isomorphic(pair):
+    a, b = pair
+    assert ((canonical_nquads(a) == canonical_nquads(b))
+            == _isomorphic(a, b))
+
+
+# rings stay under 2n^2 steps directed and 8n^2 undirected (364 at 7
+# bnodes); a 5-clique takes 4080, each extra node multiplies that
+_SMALL_BUDGET = 1000
+
+
+@settings(**_PROPS)
+@given(st.integers(1, 7), st.booleans(), st.data())
+def test_budget_spares_rings(n, both_ways, data):
+    nodes = data.draw(st.permutations([f"_:n{i}" for i in range(n)]))
+    quads = _ring(nodes) + (_ring(nodes[::-1]) if both_ways else [])
+    quads = data.draw(st.permutations(list(dict.fromkeys(quads))))
+    assert (canonical_nquads(quads, max_permutation_steps=_SMALL_BUDGET)
+            == canonical_nquads(quads))
+
+
+@settings(**dict(_PROPS, max_examples=30))
+@given(st.integers(5, 7), st.data())
+def test_budget_stops_cliques(n, data):
+    nodes = [f"_:n{i}" for i in range(n)]
+    quads = data.draw(st.permutations(
+        [Quad(x, "http://ex/p", y) for x in nodes for y in nodes if x != y]))
+    with pytest.raises(CanonicalizationBudgetExceeded):
+        canonical_nquads(quads, max_permutation_steps=_SMALL_BUDGET)

@@ -6,8 +6,9 @@ suite pins sf0.01; this sweeps the others:
     python tools/oracle_sweep.py --sf-dir <sf dir> [--cpus N] \
         [--only 'dedup_*' ann_lsh_topk ...]
 
-``--only`` takes shell-style patterns (fnmatch); a pattern that matches
-no query is an error. ``--cpus`` defaults to the machine's CPU count.
+``--only`` takes shell-style patterns (fnmatch) and may be repeated
+(``--only 'text_*' --only ann_lsh_topk``); a pattern that matches no
+query is an error. ``--cpus`` defaults to the machine's CPU count.
 
 Every query is value-exact at sf0.001, sf0.01 and sf0.1 (no size
 assumptions anywhere). Prints one JSON line.
@@ -48,7 +49,7 @@ def main():
     p = argparse.ArgumentParser()
     p.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     p.add_argument("--cpus", type=int, default=os.cpu_count())
-    p.add_argument("--only", nargs="*", metavar="PATTERN")
+    p.add_argument("--only", nargs="*", action="extend", metavar="PATTERN")
     args = p.parse_args()
 
     spec = importlib.util.spec_from_file_location(
