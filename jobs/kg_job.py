@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 
 def main():
@@ -61,28 +61,11 @@ def main():
         if not (args.pages or args.warc):
             raise SystemExit("--stream needs --pages or --warc")
 
-    # Deployment-agnostic session: no master/memory pinning here (that's
-    # spark-submit's job on a cluster), but DO bound the Arrow batch
-    # size: page rows carry multi-KB html binaries, and the default
-    # 10000-row batches x 32 concurrent tasks exhaust the JVM's direct
-    # memory arena (reproduced at 1.2M pages: netty OutOfDirectMemoryError
-    # at the 1 GiB default). 2048-row batches keep per-task buffers a few
-    # MB regardless of page size. driver.memory here is effective ONLY
-    # when this script is launched as a plain python process (the JVM
-    # starts inside getOrCreate, and local-mode executors live in that
-    # JVM — without it a million-page run OOMs the default ~1g heap,
-    # reproduced at 600k pages). Under spark-submit the builder value is
-    # ignored because the JVM is already up — pass --driver-memory 8g on
-    # the submit command line (see the module docstring).
-    spark = (SparkSession.builder.appName("kg-construct")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.files.openCostInBytes",
-                     str(128 * 1024 * 1024))
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
-    from racket_linkeddata_spark.plans.kg import build_kg, materialize
+    from racket_linkeddata_spark.plans.kg import (
+        build_kg, job_session, materialize)
     from racket_linkeddata_spark.sources.pages import synthesize_pages
+
+    spark = job_session("kg-construct")
 
     if args.stream:
         path = args.pages or args.warc

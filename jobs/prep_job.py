@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession
-
 
 def parse_weights(spec: str) -> dict:
     """'src0=0.5,books=1.0' -> {'src0': 0.5, 'books': 1.0} (loud on
@@ -53,17 +51,11 @@ def main():
     p.add_argument("--shards", type=int, default=64)
     args = p.parse_args()
 
-    # deployment-agnostic session (the kg_job rationale: no master
-    # pinning; bounded Arrow batches; AQE on)
-    spark = (SparkSession.builder.appName("prep-corpus")
-             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.files.openCostInBytes",
-                     str(128 * 1024 * 1024))
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
     from racket_linkeddata_spark.operators.packing import pack_offsets
     from racket_linkeddata_spark.plans.curation import prep_corpus
+    from racket_linkeddata_spark.plans.kg import job_session
+
+    spark = job_session("prep-corpus")
 
     docs = spark.read.parquet(args.docs)
     bench = (spark.read.parquet(args.benchmark).select("text")

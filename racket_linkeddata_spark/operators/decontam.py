@@ -9,20 +9,44 @@ LLM-pipeline brief.
 
 100 TB shape:
 - the benchmark side is SMALL by nature (eval sets are MBs): its
-  distinct n-gram set is broadcast, so the contaminated-gram probe is a
-  map-side hash join — the training corpus's exploded n-grams are
-  filtered to hits BEFORE the only shuffle;
-- the only shuffle is the per-doc hit count over hit rows (a vanishing
-  fraction of the corpus), plus the left join back to doc ids;
-- per-doc total gram counts come from size(shingles) map-side — the
-  full gram stream never aggregates globally.
+  distinct n-gram set is collected once and broadcast as a frozenset;
+- each training document is decided from its own text by one Arrow
+  kernel (contamination_udf) that counts its distinct grams and how
+  many the set holds: map-only, no gram stream, no shuffle, no join
+  back on the id.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .textstats import shingles_arrow
+from .textstats import word_grams
+
+
+def contamination_udf(benchmark: DataFrame, n: int = 13,
+                      text_col: str = "text"):
+    """The contamination kernel as a column function: text ->
+    struct<n_grams, n_hits>, the document's distinct word ``n``-grams
+    (textstats.word_grams: fewer than ``n`` tokens or NULL -> 0) and
+    how many of them occur in ``benchmark``. ``benchmark`` only needs
+    ``text_col``; its distinct gram set is built from one collect on the
+    calling thread and broadcast — callers with a multi-GB "benchmark"
+    should pre-shard it instead."""
+    held = benchmark.sparkSession.sparkContext.broadcast(frozenset(
+        g for (t,) in benchmark.select(text_col).collect()
+        for g in word_grams(t, n)))
+
+    @F.pandas_udf("struct<n_grams:bigint, n_hits:bigint>")
+    def contam_udf(texts: pd.Series) -> pd.DataFrame:
+        from .util import worker_runtime_tune
+        worker_runtime_tune()
+        bench = held.value
+        rows = [(len(g), len(bench.intersection(g)))
+                for g in (word_grams(t, n) for t in texts)]
+        return pd.DataFrame(rows, columns=["n_grams", "n_hits"],
+                            dtype="int64")
+    return contam_udf
 
 
 def contamination_stats(docs: DataFrame, benchmark: DataFrame,
@@ -30,42 +54,19 @@ def contamination_stats(docs: DataFrame, benchmark: DataFrame,
                         text_col: str = "text",
                         id_col: str = "doc_id") -> DataFrame:
     """(doc_id, n_grams, n_hits, is_contaminated) for every training
-    document: distinct word ``n``-grams, how many of them occur in the
-    benchmark corpus, and the ``>= min_hits`` verdict. Documents
-    shorter than ``n`` tokens have 0 grams and are never contaminated
-    (matching shingles' short-doc guard).
+    document, one projection of the row: distinct word ``n``-grams, how
+    many of them occur in the benchmark corpus, and the ``>= min_hits``
+    verdict. Documents shorter than ``n`` tokens have 0 grams and are
+    never contaminated (matching shingles' short-doc guard).
 
-    ``benchmark`` only needs ``text_col``; it is reduced to its
-    distinct n-gram set and broadcast — callers with a multi-GB
-    "benchmark" should pre-shard it instead.
-
-    ``docs`` is referenced by two branches (the gram explode and the
-    per-doc gram-count base) — pass a pinned/cheap lineage, or the
-    upstream plan evaluates twice (the repo's self-join-over-expensive-
-    trees gotcha)."""
-    grams = shingles_arrow(n)
-    bench_grams = (benchmark
-                   .select(F.explode(grams(F.col(text_col)))
-                           .alias("g"))
-                   .distinct())
-    doc_grams = docs.select(
-        F.col(id_col),
-        F.explode(grams(F.col(text_col))).alias("g"))
-    hits = (doc_grams
-            .join(F.broadcast(bench_grams), "g")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_hits")))
-    base = docs.select(
-        F.col(id_col),
-        F.size(grams(F.col(text_col))).cast("bigint")
-        .alias("n_grams"))
-    return (base
-            .join(hits, id_col, "left")
-            .select(id_col, "n_grams",
-                    F.coalesce("n_hits", F.lit(0)).cast("bigint")
-                    .alias("n_hits"))
-            .withColumn("is_contaminated",
-                        F.col("n_hits") >= min_hits))
+    Each row is decided from its own text: rows sharing an id get their
+    own counts. A NULL-``id_col`` row is never attributed a hit
+    (n_hits = 0), the verdict the SQL replica's join on the id gives."""
+    c = contamination_udf(benchmark, n, text_col)(F.col(text_col))
+    n_hits = F.when(F.col(id_col).isNull(), 0).otherwise(c["n_hits"])
+    return docs.select(F.col(id_col), c["n_grams"].alias("n_grams"),
+                       n_hits.alias("n_hits"),
+                       (n_hits >= min_hits).alias("is_contaminated"))
 
 
 def decontaminate(docs: DataFrame, benchmark: DataFrame,
@@ -73,29 +74,15 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
                   text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """The filter face: training docs with NO benchmark collision
-    (``n_hits < min_hits``). Returns the input columns of survivors.
+    (``n_hits < min_hits``), one Filter on the row. Returns the input
+    columns of survivors.
 
-    Anti-joins on the CONTAMINATED id set rather than inner-joining on
-    the clean set (review r06b): a NULL-``id_col`` row can never be
-    attributed a hit (contamination_stats' id-keyed left join reports
-    it n_hits=0), so an inner join that silently dropped it diverged
-    from the stats face and from the SQL ``ANTI JOIN`` replica. This
-    also skips the per-doc gram-count branch entirely — the
-    contaminated set needs only the (tiny) hit aggregate."""
-    grams = shingles_arrow(n)
-    bench_grams = (benchmark
-                   .select(F.explode(grams(F.col(text_col)))
-                           .alias("g"))
-                   .distinct())
-    contam = (docs.select(F.col(id_col),
-                          F.explode(grams(F.col(text_col)))
-                          .alias("g"))
-              .join(F.broadcast(bench_grams), "g")
-              .groupBy(id_col)
-              .agg(F.count(F.lit(1)).alias("n_hits"))
-              .filter(F.col("n_hits") >= min_hits)
-              .select(id_col))
-    return docs.join(contam, id_col, "left_anti")
+    Same verdicts as contamination_stats: a NULL-``id_col`` row is
+    never attributed a hit, so it survives (the SQL ``ANTI JOIN``
+    replica keeps it too), and a clean row that shares its id with a
+    contaminated row is kept."""
+    c = contamination_udf(benchmark, n, text_col)(F.col(text_col))
+    return docs.filter(F.col(id_col).isNull() | (c["n_hits"] < min_hits))
 
 
 def _validate_banding(k: int, bands: int):
@@ -182,8 +169,9 @@ def fuzzy_decontaminate(docs: DataFrame, benchmark: DataFrame, *,
                         id_col: str = "doc_id") -> DataFrame:
     """The filter face: drop training docs whose signature collides
     with any benchmark doc in >= ``min_bands`` bands.  Anti-join on the
-    CONTAMINATED id set (the decontaminate() convention: NULL-id rows
-    can never be attributed a collision and must survive)."""
+    CONTAMINATED id set: a collision is attributed to an id, so a
+    NULL-id row is never attributed one and survives (decontaminate's
+    NULL-id verdict)."""
     if min_bands < 1:
         raise ValueError(
             f"fuzzy_decontaminate: min_bands must be >= 1, got "

@@ -29,6 +29,8 @@ from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
+from .util import free_column
+
 _SPACE = 16 ** 8  # 8 hex chars
 
 
@@ -172,10 +174,7 @@ def quota_sample(docs: DataFrame, quotas: Dict[str, int], *,
     caps = list(quotas.values()) \
         + ([default_quota] if default_quota is not None else [])
     max_cap = max(caps) if caps else 0
-    # collision-safe working column (the input may carry '_rank')
-    rank_col = "_rank"
-    while rank_col in docs.columns:
-        rank_col += "_"
+    rank_col = free_column(docs, "_rank")  # the input may carry '_rank'
     kept = (capped
             .withColumn(rank_col, F.row_number().over(w))
             .filter((F.col(rank_col) <= F.lit(max_cap))

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .util import free_column
+
 
 def _alpha_x1e6(m: int) -> int:
     # canonical HLL bias constants (Flajolet et al. 2007)
@@ -102,12 +104,9 @@ def cms_sketch(df: DataFrame, col: str, *, width: int = 256,
                 .select(F.posexplode(hashes).alias("row", "col"))
                 .groupBy("row", "col")
                 .agg(F.count(F.lit(1)).alias("cnt")))
-    # collision-safe working column (the r06e/r06f convention): an
-    # input value column literally named '_vn' would otherwise make
-    # the post-aggregate select AMBIGUOUS_REFERENCE
-    vn = "_vn"
-    while vn in df.columns:
-        vn = "_" + vn
+    # collision-safe working column: an input value column named '_vn'
+    # would otherwise make the post-aggregate select AMBIGUOUS_REFERENCE
+    vn = free_column(df, "_vn")
     vals = (df.filter(F.col(col).isNotNull())
             .groupBy(col).agg(F.count(F.lit(1)).alias(vn)))
     return (vals

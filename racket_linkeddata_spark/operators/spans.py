@@ -44,6 +44,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .util import free_column
+
 
 def _windows(docs: DataFrame, L: int, text_col: str,
              id_col: str) -> DataFrame:
@@ -145,10 +147,7 @@ def span_dedup(docs: DataFrame, L: int = 20, min_repeat: int = 2, *,
                             text_col=text_col, id_col=id_col,
                             broadcast_threshold=broadcast_threshold,
                             stats_out=stats_out)
-    # collision-safe working column (the input may carry 'spans')
-    sp_col = "_dup_spans"
-    while sp_col in docs.columns:
-        sp_col += "_"
+    sp_col = free_column(docs, "_dup_spans")
     per_doc = (spans
                .groupBy(id_col)
                .agg(F.collect_list(

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .util import free_column
+
 _FORMS = ("NFC", "NFD", "NFKC", "NFKD")
 
 
@@ -54,13 +56,10 @@ def normalize_text(docs: DataFrame, form: str = "NFC", *,
     watches to size the mess in a crawl."""
     if form not in _FORMS:
         raise ValueError(f"form must be one of {_FORMS}, got {form!r}")
-    if "norm_changed" in docs.columns:
+    if free_column(docs, "norm_changed") != "norm_changed":
         raise ValueError("input already has a 'norm_changed' column — "
                          "normalize_text emits it")
-    # collision-safe working column (the input may carry '_norm')
-    tmp = "_norm"
-    while tmp in docs.columns:
-        tmp += "_"
+    tmp = free_column(docs, "_norm")  # the input may carry '_norm'
     norm = _normalizer(form)(F.col(text_col))
     return (docs
             .withColumn(tmp, norm)

@@ -149,6 +149,17 @@ def parallel_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     return ep.localCheckpoint(eager=eager)
 
 
+def free_column(df: DataFrame, name: str) -> str:
+    """``name``, suffixed with '_' until no column of ``df`` holds it:
+    a collision-safe working column. Names compare case-insensitively,
+    as Spark resolves them (a working '_norm' would overwrite an input
+    '_NORM')."""
+    taken = {c.lower() for c in df.columns}
+    while name.lower() in taken:
+        name += "_"
+    return name
+
+
 def f64_sql(x: float) -> str:
     """A float64 as a DuckDB literal that parses back BIT-EXACT — for
     oracles that pin trained/derived float tables as VALUES literals

@@ -10,11 +10,11 @@ spark-submit CLI (``jobs/prep_job.py``):
      2. near-dup dedup: MinHash-LSH candidates -> exact Jaccard verify
         on candidate-only shingles -> connected components; each
         cluster keeps its minimum id, the other ids are dropped;
-  B. per-document work, map-only but for decontamination's anti join:
+  B. per-document work, one map-only query, pinned:
      3. quality gate, a row filter (C4/Gopher signals, fixed-point);
-     4. benchmark decontamination (optional — broadcast gram probe);
+     4. benchmark decontamination (optional — per-row gram hits);
      5. deterministic mixture sampling (optional recipe);
-     6. annotate language + BPE token price in one projection, pinned;
+     6. annotate language + BPE token price, projected with 4's hits;
   and once both have finished, B's rows left-anti-joined to A's ids.
 
 The branches read nothing of each other. Every step of B keeps or
@@ -28,9 +28,9 @@ overlap A's instead of waiting for them. The anti join reads only the
 losers (the dropped ids of dedup_keepers' verdicts); a semi join to the
 keepers would first rejoin every survivor id to the clusters.
 
-Every stage is an operator module's (stage 6 calls the langid and BPE
-kernels as column functions); this file composes them and pins the
-twice-consumed intermediates (the self-join-over-expensive-trees gotcha).
+Every stage is an operator module's (stages 4 and 6 call the gram-hit,
+langid and BPE kernels as column functions); this file composes them
+and pins the survivors, which both branches read, and branch B's result.
 """
 
 from __future__ import annotations
@@ -53,9 +53,12 @@ def prep_corpus(docs: DataFrame, *,
     one-column text table) enables decontamination; ``mixture_weights``
     enables per-source subsampling; ``merges`` is the BPE merge table
     for pricing (default: the tiny closed-form pair). Runs as two
-    concurrent branches joined once at the end (module docstring)."""
+    concurrent branches joined once at the end (module docstring).
+    ``doc_id`` must be a row key: stage 1 joins the survivors back on
+    it, which drops NULL ids and fans out documents sharing an id."""
     from racket_linkeddata_spark.operators.bpe import bpe_count_udf
-    from racket_linkeddata_spark.operators.decontam import decontaminate
+    from racket_linkeddata_spark.operators.decontam import (
+        contamination_udf)
     from racket_linkeddata_spark.operators.graph import (
         connected_components)
     from racket_linkeddata_spark.operators.langid import lang_id_udf
@@ -69,12 +72,12 @@ def prep_corpus(docs: DataFrame, *,
     # stage 1: exact dedup — one map-side-combinable aggregate on the
     # text hash, survivors rejoined by id.
     #
-    # Every pin below is util.parallel_checkpoint: these small join
-    # outputs land in ONE partition (a broadcast join inherits the
+    # Pinned with util.parallel_checkpoint: this small join output
+    # lands in ONE partition (a broadcast join inherits the
     # single-split scan; a shuffle join gets AQE-coalesced), a plain
-    # localCheckpoint stores them that way, and every downstream
-    # CPU-bound stage (the minhash tree, the 8-gram decontam explode,
-    # the quality signals, the langid/BPE UDFs) would run single-task
+    # localCheckpoint stores it that way, and every downstream
+    # CPU-bound stage (the minhash tree, the quality signals, the
+    # gram-hit/langid/BPE kernels) would run single-task
     # — measured 28 s for the minhash stage alone at sf1.0, and a
     # bare repartition on top is not enough because Catalyst pushes
     # projections through it (see parallel_checkpoint's docstring).
@@ -101,30 +104,27 @@ def prep_corpus(docs: DataFrame, *,
     qk.update(quality_kwargs or {})
 
     def annotated() -> DataFrame:
-        # branch B, stage 3: the quality gate, a row filter. Pinned:
-        # read twice by decontaminate (gram explode + anti-join); its
-        # plan is narrow over surv, so the pin materializes once
-        gated = parallel_checkpoint(quality_gate(
-            surv.select("doc_id", "text", "source"), **qk))
-
-        # stage 4: benchmark decontamination (broadcast gram probe)
-        clean = decontaminate(gated, benchmark, n=decontam_n) \
-            if benchmark is not None else gated
-
-        # stage 5: deterministic mixture sampling. Pinned to fan out
-        # the one partition decontaminate's anti join lands in
-        mixed = mixture_sample(clean, mixture_weights,
-                               default_weight=default_weight) \
-            if mixture_weights else clean
-        mixed = parallel_checkpoint(mixed)
-
-        # stage 6: annotate survivors in one projection of the row's
-        # text. Pinned eagerly, so that the annotation runs on this
-        # branch's thread rather than in the caller's final job.
+        # branch B, one map-only query over surv: stages 3 and 5 are
+        # row filters; stage 4's hit count (NULL ids went at stage 1)
+        # and stage 6's annotation share ONE ArrowEvalPython (a second
+        # Python node starts a second worker per task) behind an
+        # explode(array(struct)) barrier, which keeps the hit filter
+        # from sinking below the projection. Pinned eagerly, so that
+        # the work runs on this branch's thread, not the final job
+        kept = quality_gate(surv.select("doc_id", "text", "source"), **qk)
+        if mixture_weights:
+            kept = mixture_sample(kept, mixture_weights,
+                                  default_weight=default_weight)
+        text = F.col("text")
         bpe = bpe_count_udf(merges or [("t", "h"), ("th", "e")])
-        return mixed.select(
-            "doc_id", lang_id_udf()(F.col("text"))["lang"].alias("lang"),
-            bpe(F.col("text")).alias("n_tokens")).localCheckpoint(eager=True)
+        hits = (contamination_udf(benchmark, decontam_n)(text)["n_hits"]
+                if benchmark is not None else F.lit(0))
+        ann = F.struct(lang_id_udf()(text)["lang"].alias("lang"),
+                       bpe(text).alias("n_tokens"), hits.alias("n_hits"))
+        return (kept.select("doc_id", F.explode(F.array(ann)).alias("a"))
+                .filter(F.col("a.n_hits") < 1)
+                .select("doc_id", "a.lang", "a.n_tokens")
+                .localCheckpoint(eager=True))
 
     drop, ann = concurrently(dropped, annotated)
     return ann.join(drop, "doc_id", "left_anti")

@@ -59,11 +59,35 @@ def session(app: str = "kg", cpus: Optional[int] = None,
          # measured ~20% slower from batch overhead). Size by BYTES at
          # production: rows x avg page size x concurrent tasks must fit
          # the JVM direct-memory arena — real 100KB+ pages need ~2048
-         # (see jobs/kg_job.py, where the 10000-row default reproducibly
+         # (see job_session, where the 10000-row default reproducibly
          # OOMed netty direct memory at 1.2M pages)
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
          .config("spark.driver.memory", "8g"))
     return b.getOrCreate()
+
+
+def job_session(app: str) -> SparkSession:
+    """The session of both spark-submit entries (jobs/kg_job.py,
+    jobs/prep_job.py): no master pinning (spark-submit's job on a
+    cluster), AQE on, bounded Arrow batches."""
+    # page rows carry multi-KB html binaries, and the default
+    # 10000-row batches x 32 concurrent tasks exhaust the JVM's direct
+    # memory arena (reproduced at 1.2M pages: netty OutOfDirectMemoryError
+    # at the 1 GiB default). 2048-row batches keep per-task buffers a few
+    # MB regardless of page size. driver.memory here is effective ONLY
+    # when a job is launched as a plain python process (the JVM
+    # starts inside getOrCreate, and local-mode executors live in that
+    # JVM — without it a million-page run OOMs the default ~1g heap,
+    # reproduced at 600k pages). Under spark-submit the builder value is
+    # ignored because the JVM is already up — pass --driver-memory 8g on
+    # the submit command line (see jobs/kg_job.py's docstring).
+    return (SparkSession.builder.appName(app)
+            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+            .config("spark.sql.adaptive.enabled", "true")
+            .config("spark.sql.files.openCostInBytes",
+                    str(128 * 1024 * 1024))
+            .config("spark.driver.memory", "8g")
+            .getOrCreate())
 
 
 def nodes_from_triples(triples: DataFrame) -> DataFrame:

@@ -69,6 +69,23 @@ def test_decontaminate_null_doc_id_survives(spark):
     assert sorted(kept, key=lambda x: (x is None, x)) == [0, None]
 
 
+def test_decontam_decides_each_row_not_each_id(spark):
+    """Two rows share id 5, one carrying the benchmark passage, one
+    clean: each is decided from its own text. The clean row is kept
+    and each row reports its own counts (a hit count keyed on the id
+    would give both rows the contaminated row's hits)."""
+    clean = "alpha beta gamma delta epsilon zeta"
+    d = spark.createDataFrame(
+        [(5, "the quick brown fox jumps over the dog"), (5, clean)],
+        "doc_id long, text string")
+    stats = sorted((r["n_grams"], r["n_hits"], r["is_contaminated"])
+                   for r in contamination_stats(
+                       d, _bench(spark), n=5).collect())
+    assert stats == [(2, 0, False), (4, 4, True)]
+    kept = decontaminate(d, _bench(spark), n=5).collect()
+    assert [tuple(r) for r in kept] == [(5, clean)]
+
+
 def test_mixture_stats_null_source_counted(spark):
     """NULL source rides the default rate in mixture_sample; the stats
     face must report the SAME survivors for the NULL group (review

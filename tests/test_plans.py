@@ -255,16 +255,28 @@ def test_quality_gate_is_one_filter_on_the_row(spark):
 
 
 def test_prep_annotation_is_one_projection(spark):
-    """prep_corpus stage 6, the eager pin that ends branch B, annotates
-    in one projection of the row's text: no join back on doc_id, and
-    one ArrowEvalPython node evaluates the lang and the BPE kernel once
-    each."""
+    """prep_corpus branch B, ending in one eager pin, is one map-only
+    query over the survivors: no join back on doc_id, no exchange, and
+    one ArrowEvalPython node evaluates the lang, BPE and benchmark-hit
+    kernels once each (a second Python node would start a second
+    worker per task)."""
     _, made = _new_sql_plans(
         spark, lambda: em.q_training_data_prep(spark, SF))
     [ann] = [m for m in made if "lang_udf" in m]
-    assert "Join" not in ann, ann
+    assert "Join" not in ann and "Exchange" not in ann, ann
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", ann, re.M)) == 1, ann
     assert ann.count("lang_udf(") == 1 and ann.count("bpe_udf(") == 1, ann
+    assert ann.count("contam_udf(") == 1, ann
+
+
+def test_decontamination_is_one_kernel_on_the_row(spark):
+    """contamination_stats is one projection of the row: the gram-hit
+    kernel runs in exactly one ArrowEvalPython, with no join back on
+    doc_id and no gram aggregate."""
+    p = _plan(em.q_text_decontaminate(spark, SF))
+    assert p.count("ArrowEvalPython") == 1 and p.count("contam_udf(") == 1, p
+    for node in ("Join", "Aggregate", "Generate"):
+        assert node not in p, (node, p)
 
 
 def test_paragraph_dedup_plan_shape(spark):

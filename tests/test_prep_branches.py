@@ -50,8 +50,7 @@ def serial_prep_corpus(docs, *, benchmark=None, mixture_weights=None,
             .filter("keep").select("doc_id"))
 
     # stage 3: the composed quality gate (full signal set; fixed-point)
-    # pinned: consumed twice by decontaminate (gram explode + the
-    # survivor anti-join)
+    # pinned: its join back to the keepers lands in few partitions
     qk = dict(min_tokens=5, max_tokens=100_000,
               min_mean_word_len_x1000=2000, max_mean_word_len_x1000=20_000,
               min_stopwords=1, max_symbol_x1000=100,
@@ -61,7 +60,7 @@ def serial_prep_corpus(docs, *, benchmark=None, mixture_weights=None,
         surv.join(kept, "doc_id").select("doc_id", "text", "source"),
         **qk))
 
-    # stage 4: benchmark decontamination (broadcast gram probe)
+    # stage 4: benchmark decontamination (per-row gram-hit filter)
     clean = decontaminate(gated, benchmark, n=decontam_n) \
         if benchmark is not None else gated
 

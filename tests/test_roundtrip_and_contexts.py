@@ -2,6 +2,9 @@
 
 import json
 
+import pytest
+
+from racket_linkeddata_spark.core.context import JsonLdError
 from racket_linkeddata_spark.core.expand import expand
 from racket_linkeddata_spark.core.from_rdf import from_rdf
 from racket_linkeddata_spark.core.to_rdf import to_rdf
@@ -19,6 +22,50 @@ def test_tordf_fromrdf_roundtrip_preserves_triples():
         # blank labels may differ; compare canonical forms
         from racket_linkeddata_spark.core.urdna2015 import canonical_nquads
         assert canonical_nquads(quads1) == canonical_nquads(quads2)
+
+
+V = "http://schema.org/"
+EXPAND_CASES = [
+    # lists nested through node objects, three levels deep
+    {"@context": {"@vocab": V,
+                  "tags": {"@id": V + "tags", "@container": "@list"}},
+     "@id": "http://ex.org/a",
+     "tags": [{"name": "n1", "tags": ["p"]},
+              {"@id": "http://ex.org/b",
+               "tags": {"@list": ["q", {"tags": ["r"]}]}}]},
+    # @reverse by keyword (a named and an anonymous node) and by term
+    {"@context": {"@vocab": V}, "@id": "http://ex.org/a",
+     "@reverse": {"knows": [{"@id": "http://ex.org/b"},
+                            {"name": "anon"}]}},
+    {"@context": {"@vocab": V, "isKnownBy": {"@reverse": V + "knows"}},
+     "@id": "http://ex.org/a", "isKnownBy": {"@id": "http://ex.org/c"}},
+    # a top-level @graph holding a named graph with a language value
+    {"@context": {"@vocab": V},
+     "@graph": [{"@id": "http://ex.org/a", "name": "A"},
+                {"@id": "http://ex.org/g",
+                 "@graph": {"@id": "http://ex.org/b",
+                            "name": {"@value": "B", "@language": "fr"}}}]},
+]
+
+
+def test_expand_is_idempotent_on_expanded_output():
+    """expand(expand(d)) == expand(d): expanded output is a fixpoint,
+    over the synthetic page documents (every shape variant) and
+    handmade nested-list, @reverse and @graph documents."""
+    for doc in [_jsonld_doc(i) for i in range(100)] + EXPAND_CASES:
+        once = expand(doc)
+        assert once and expand(once) == once, doc
+
+
+def test_expand_rejects_a_list_of_lists():
+    """JSON-LD 1.0 has no list of lists: a @list directly inside a
+    @list (by keyword or through a @list container) is an error."""
+    for doc in ({"@context": {"@vocab": V}, "@id": "http://ex.org/a",
+                 "tags": {"@list": [{"@list": ["x"]}, "y"]}},
+                {"@context": {"m": {"@id": V + "m", "@container": "@list"}},
+                 "@id": "http://ex.org/a", "m": [["x"], ["y"]]}):
+        with pytest.raises(JsonLdError, match="list of lists"):
+            expand(doc)
 
 
 def test_node_map_input_not_mutated():

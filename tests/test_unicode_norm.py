@@ -54,3 +54,16 @@ def test_idempotent(spark):
     once = normalize_text(_corpus(spark))
     twice = normalize_text(once.select("doc_id", "text"))
     assert all(not r["norm_changed"] for r in twice.collect())
+
+
+def test_working_column_is_free_in_any_case(spark):
+    """Spark resolves column names case-insensitively, so an input
+    column ``_NORM`` collides with the working column ``_norm``: it
+    must come through untouched, and ``NORM_CHANGED`` is refused."""
+    d = spark.createDataFrame([(1, DECOMPOSED, "keep me")],
+                              "doc_id long, text string, _NORM string")
+    [row] = normalize_text(d).collect()
+    assert row.asDict() == {"doc_id": 1, "text": "Café", "_NORM": "keep me",
+                            "norm_changed": True}
+    with pytest.raises(ValueError):
+        normalize_text(d.withColumnRenamed("_NORM", "NORM_CHANGED"))
