@@ -24,6 +24,13 @@ import argparse
 from pyspark.sql import functions as F
 
 
+def exists(spark, path: str) -> bool:
+    """Whether ``path`` exists, checked through Hadoop's FileSystem, so
+    --out may be any filesystem Spark writes to."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def main():
     p = argparse.ArgumentParser()
     p.add_argument("--pages")
@@ -78,11 +85,9 @@ def main():
         q.awaitTermination()
         # no edges dir: zero micro-batches fired (nothing in the input
         # dir yet), a valid drain. Any other read error is a broken
-        # store and fails the job. Checked through Hadoop's FileSystem,
-        # so --out may be any filesystem Spark writes to.
-        edges = spark._jvm.org.apache.hadoop.fs.Path(f"{args.out}/edges")
-        fs = edges.getFileSystem(spark._jsc.hadoopConfiguration())
-        n = read_edges(spark, args.out).count() if fs.exists(edges) else 0
+        # store and fails the job.
+        n = (read_edges(spark, args.out).count()
+             if exists(spark, f"{args.out}/edges") else 0)
         print(f"kg-construct done: {n} edges at {args.out} (streamed)")
         spark.stop()
         return
@@ -105,8 +110,9 @@ def main():
         # - during the data phase: edges/nodes of snap N (possibly
         #   partial), no page_log/lineage rows of run N. A first run
         #   has no page_log, so it is rebuilt from scratch; a resume
-        #   run re-derives snapshot N and reprocesses the same pages
-        #   (rows of the crashed attempt already in snap N stay there);
+        #   run would re-derive snapshot N and append the same pages
+        #   into snap N again, beside the crashed attempt's rows, and
+        #   count them twice, so abort below;
         # - page_log landed, lineage did not: a first run has a
         #   page_log but no lineage — falling back to overwrite would
         #   destroy every prior snapshot, so abort below; a resume run
@@ -149,6 +155,23 @@ def main():
                     "refusing to resume (they would be processed and "
                     "counted twice). Repair/remove the output dir or "
                     "rerun without --resume to rebuild from scratch.")
+            # snap N holds data: the run that wrote it crashed before
+            # its resume record landed. If it logged nothing, page_log
+            # and lineage count the same triples; a page_log ahead of
+            # lineage logged its pages, which this run skips.
+            snaps = [f"{args.out}/{t}/snap={snapshot_id}"
+                     for t in ("edges", "nodes")]
+            if any(exists(spark, s) for s in snaps):
+                logged = processed_log.agg(F.sum("n_triples")).first()[0]
+                recorded = lineage.agg(F.sum("triple_count")).first()[0]
+                if logged == recorded:
+                    raise SystemExit(
+                        f"--resume: {' and '.join(snaps)} hold data that "
+                        f"{args.out}/page_log does not record — refusing "
+                        "to resume (those pages would be processed and "
+                        "counted twice). Remove those two partition dirs "
+                        "or rerun without --resume to rebuild from "
+                        "scratch.")
 
     kg = build_kg(pages, processed_log=processed_log,
                   staging_path=args.staging, snapshot_id=snapshot_id)

@@ -20,14 +20,15 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+import re
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import (
     DataFrame, DataFrameWriter, SparkSession, functions as F)
 
-from ..operators.dedup import dedup_triples, skolemize_bnodes
+from ..operators.dedup import TRIPLE_KEY, dedup_triples, skolemize_bnodes
 from ..operators.entity_link import link_entities
-from ..operators.extract import extract_triples, triples_only
+from ..operators.extract import TRIPLES_SCHEMA, extract_triples, triples_only
 from ..operators.lineage import page_log, partition_lineage, resume_filter
 from ..operators.util import concurrently
 
@@ -143,7 +144,8 @@ def build_kg(
     extracted = extract_triples(pages, contexts_broadcast, mode=mode)
     if staging_path is not None:
         extracted.write.mode("overwrite").parquet(staging_path)
-        extracted = pages.sparkSession.read.parquet(staging_path)
+        extracted = pages.sparkSession.read.schema(TRIPLES_SCHEMA) \
+            .parquet(staging_path)
     else:
         extracted = extracted.localCheckpoint(eager=False)
 
@@ -175,6 +177,17 @@ def register_views(kg: KgResult, prefix: str = "kg_") -> None:
     kg.nodes.createOrReplaceTempView(f"{prefix}nodes")
     kg.log.createOrReplaceTempView(f"{prefix}page_log")
     kg.lineage.createOrReplaceTempView(f"{prefix}lineage")
+
+
+# The store tables as _write_store lays them out: the data columns, then
+# the partition columns (int, as partition discovery infers them). Reads
+# name them, so no read runs a schema-inference job.
+EDGES_SCHEMA = (
+    "subj string, pred string, obj_kind tinyint, obj_value string, "
+    "obj_dt string, obj_lang string, graph string, n_sources bigint, "
+    "snap int, bucket int")
+NODES_SCHEMA = (
+    "canon_uri string, n_mentions bigint, kind tinyint, snap int, bucket int")
 
 
 def _write_store(out_dir: str, snapshot_id: int, buckets: int,
@@ -222,10 +235,12 @@ def materialize(kg: KgResult, out_dir: str, buckets: int = 64,
       at production scale);
     - edges/nodes also carry a ``snap`` partition column (the run's
       snapshot id). Resume appends land in their OWN partition instead of
-      interleaving rows with prior runs, so a re-run of a failed snapshot
-      can overwrite just its partition and the merged view
+      interleaving rows with prior runs, and the merged view
       (read_edges/read_nodes) re-aggregates across snapshots — the
-      parquet stand-in for an Iceberg MERGE;
+      parquet stand-in for an Iceberg MERGE. An append never replaces
+      rows: a second write into a snapshot adds its rows to the first
+      one's, so ``kg_job --resume`` refuses to append into a snapshot
+      partition that a crashed run left without a resume record;
     - page log + lineage land beside them (resume inputs; page-log urls
       are disjoint across snapshots by construction of resume_filter).
 
@@ -271,32 +286,63 @@ def _recover_compaction(out_dir: str, table: str) -> None:
         shutil.move(old, path)
 
 
-def read_edges(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Merged edges view across snapshots: same triple key appearing in
-    several resume snapshots re-aggregates (sum n_sources) — the read
-    side of the parquet MERGE stand-in. Single-snapshot outputs pass
-    through the aggregate unchanged."""
-    from ..operators.dedup import TRIPLE_KEY
+# a file one Spark write job made: part-<split>-<the job's uuid>...
+_PART_FILE = re.compile(
+    r"part-\d{5}-([0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})[._].*")
 
-    _recover_compaction(out_dir, "edges")
-    e = spark.read.parquet(f"{out_dir}/edges")
-    return (e.groupBy(*TRIPLE_KEY, "bucket")
-            .agg(F.sum("n_sources").cast("bigint").alias("n_sources")))
+
+def _one_write(df: DataFrame) -> bool:
+    """Whether every file ``df`` scans is a part file of one write job.
+    Reads the listed file index, so it runs no Spark job."""
+    uuids = set()
+    for path in df.inputFiles():
+        m = _PART_FILE.fullmatch(path.rsplit("/", 1)[-1])
+        if m is None:
+            return False
+        uuids.add(m.group(1))
+    return len(uuids) == 1
+
+
+def _read_store(spark: SparkSession, out_dir: str, table: str, schema: str,
+                key: Sequence[str], count: str) -> DataFrame:
+    """The merged view of one store table: ``key`` columns, then
+    ``count`` summed over the rows that share the key.
+
+    Every writer of the store (materialize, a streaming micro-batch,
+    compact_snapshots) lands a key-unique table in one Spark write job,
+    so a table that is one write is returned as a plain projection.
+    Several snapshots, two writes into one snapshot, or a file name
+    that is not Spark's part-file form take the aggregate."""
+    _recover_compaction(out_dir, table)
+    df = spark.read.schema(schema).parquet(f"{out_dir}/{table}")
+    if _one_write(df):
+        return df.select(*key, count)
+    return df.groupBy(*key).agg(F.sum(count).alias(count))
+
+
+def read_edges(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Merged edges view across snapshots: the same triple key in
+    several writes (resume snapshots, appends into one snapshot)
+    re-aggregates, summing n_sources — the read side of the parquet
+    MERGE stand-in. A table that is one write is key-unique and is read
+    without the aggregate."""
+    return _read_store(spark, out_dir, "edges", EDGES_SCHEMA,
+                       [*TRIPLE_KEY, "bucket"], "n_sources")
 
 
 def read_nodes(spark: SparkSession, out_dir: str) -> DataFrame:
-    _recover_compaction(out_dir, "nodes")
-    n = spark.read.parquet(f"{out_dir}/nodes")
-    return (n.groupBy("canon_uri", "kind", "bucket")
-            .agg(F.sum("n_mentions").cast("bigint").alias("n_mentions")))
+    """Merged nodes view across snapshots, summing n_mentions; like
+    read_edges, a one-write table skips the aggregate."""
+    return _read_store(spark, out_dir, "nodes", NODES_SCHEMA,
+                       ["canon_uri", "kind", "bucket"], "n_mentions")
 
 
 def compact_snapshots(spark: SparkSession, out_dir: str) -> None:
     """Fold all resume snapshots into snap=0: the parquet stand-in for
     Iceberg's rewriteDataFiles/MERGE maintenance pass. Resume appends
     are cheap but each adds a snapshot partition the merged read view
-    re-aggregates over; periodic compaction bounds that read
-    amplification.
+    re-aggregates over; a compacted table is one write again, so its
+    reads skip the aggregate.
 
     Crash safety: the rewrite lands in a temp dir first, then swaps in
     via two same-filesystem renames. The swap itself is NOT one atomic

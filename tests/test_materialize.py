@@ -1,10 +1,19 @@
 """Materialized layout: bucketed edges/nodes, resume from the written log."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from racket_linkeddata_spark.plans.kg import (
     build_kg, materialize, read_edges, read_nodes)
 from racket_linkeddata_spark.sources.pages import synthesize_pages
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+KG_JOB = os.path.join(ROOT, "jobs", "kg_job.py")
+# the merged views' keys: the store's key columns and bucket
+EDGE_KEY = ["subj", "pred", "obj_kind", "obj_value", "obj_dt", "obj_lang",
+            "graph", "bucket"]
+NODE_KEY = ["canon_uri", "kind", "bucket"]
 
 
 def test_snapshot_resume_merges_edges(spark, tmp_path):
@@ -36,6 +45,80 @@ def test_snapshot_resume_merges_edges(spark, tmp_path):
     # merged nodes view also collapses across snapshots
     nodes = read_nodes(spark, out)
     assert nodes.groupBy("canon_uri").count().filter("count > 1").count() == 0
+
+
+def _aggregate_read(spark, out, table, key, count):
+    """The merged view as an aggregate over the inferred table: every
+    read took this path before one-write tables skipped it."""
+    return (spark.read.parquet(f"{out}/{table}").groupBy(*key)
+            .agg(F.sum(count).cast("bigint").alias(count)))
+
+
+def test_one_write_reads_equal_the_aggregate(spark, tmp_path):
+    """A store that is one write is read as a projection with the
+    aggregate's rows, columns, column order and types."""
+    out = str(tmp_path / "kg")
+    materialize(build_kg(synthesize_pages(spark, 60, partitions=4)), out,
+                buckets=4)
+    for got, want in (
+            (read_edges(spark, out),
+             _aggregate_read(spark, out, "edges", EDGE_KEY, "n_sources")),
+            (read_nodes(spark, out),
+             _aggregate_read(spark, out, "nodes", NODE_KEY, "n_mentions"))):
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_append_twice_into_one_snapshot_doubles_the_counts(spark, tmp_path):
+    """Two appends into the same snapshot_id are two writes: the reads
+    still aggregate, so every key appears once with its count doubled."""
+    kg = build_kg(synthesize_pages(spark, 40, partitions=4))
+    out = str(tmp_path / "kg")
+    materialize(kg, out, buckets=4, mode="append")
+    once_e = {tuple(r[:-1]): r[-1] for r in read_edges(spark, out).collect()}
+    once_n = {tuple(r[:-1]): r[-1] for r in read_nodes(spark, out).collect()}
+    materialize(kg, out, buckets=4, mode="append")
+    edges = read_edges(spark, out).collect()
+    nodes = read_nodes(spark, out).collect()
+    assert {tuple(r[:-1]): r[-1] for r in edges} == {
+        k: 2 * v for k, v in once_e.items()}
+    assert {tuple(r[:-1]): r[-1] for r in nodes} == {
+        k: 2 * v for k, v in once_n.items()}
+    assert len(edges) == len(once_e) and len(nodes) == len(once_n)
+
+
+def test_foreign_file_name_takes_the_aggregate(spark, tmp_path):
+    """A file whose name is not Spark's part-<split>-<uuid> form proves
+    nothing about the writes: here it repeats a part file's rows, and
+    the read merges them."""
+    import shutil
+
+    out = tmp_path / "kg"
+    materialize(build_kg(synthesize_pages(spark, 40, partitions=4)),
+                str(out), buckets=4)
+    part = next((out / "edges").rglob("part-*.parquet"))
+    shutil.copy(part, part.parent / "extra.parquet")
+    copied = spark.read.parquet(str(part)).agg(F.sum("n_sources")).first()[0]
+    base = spark.read.parquet(str(out / "page_log")) \
+        .agg(F.sum("n_triples")).first()[0]
+
+    merged = read_edges(spark, str(out))
+    assert merged.count() == merged.select(*EDGE_KEY).distinct().count()
+    assert merged.agg(F.sum("n_sources")).first()[0] == base + copied
+
+
+def test_declared_store_schemas_are_the_written_ones(spark, tmp_path):
+    """The schemas the store reads declare equal the ones Spark infers
+    from a freshly written store: the writer and the reader agree."""
+    from racket_linkeddata_spark.plans.kg import EDGES_SCHEMA, NODES_SCHEMA
+
+    out = str(tmp_path / "kg")
+    materialize(build_kg(synthesize_pages(spark, 40, partitions=4)), out,
+                buckets=4)
+    for table, ddl in (("edges", EDGES_SCHEMA), ("nodes", NODES_SCHEMA)):
+        path = f"{out}/{table}"
+        assert spark.read.schema(ddl).parquet(path).schema == \
+            spark.read.parquet(path).schema, table
 
 
 def test_materialize_and_resume(spark, tmp_path):
@@ -124,13 +207,12 @@ def test_compaction_crash_recovery_all_states(spark, tmp_path):
     shutil.copytree(path, tmp)
     shutil.rmtree(f"{tmp}/snap=0")  # make it visibly partial
     assert {tuple(r) for r in read_edges(spark, out).collect()} == want
-    assert not __import__("os").path.exists(tmp)
+    assert not os.path.exists(tmp)
 
     # state 2: crash between the two renames (path absent, tmp complete)
     shutil.copytree(path, tmp)
     shutil.move(path, old)
     assert {tuple(r) for r in read_edges(spark, out).collect()} == want
-    import os
     assert os.path.exists(path) and not os.path.exists(old)
 
     # state 3: crash before the final cleanup (path present, old present)
@@ -229,7 +311,6 @@ def test_kg_job_warc_input(spark, tmp_path):
     """kg_job --warc: the spark-submit entry builds the same KG from a
     raw WARC directory as from the equivalent pages table."""
     import datetime
-    import os
     import subprocess
     import sys
 
@@ -247,9 +328,9 @@ def test_kg_job_warc_input(spark, tmp_path):
     (wdir / "junk.warc").write_bytes(b"NOT A WARC")  # must be isolated
 
     out = str(tmp_path / "kg")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=ROOT)
     run = subprocess.run(
-        [sys.executable, "/root/repo/jobs/kg_job.py",
+        [sys.executable, KG_JOB,
          "--warc", str(wdir), "--out", out],
         env=env, capture_output=True, text=True)
     assert run.returncode == 0, run.stderr[-2000:]
@@ -267,7 +348,6 @@ def test_kg_job_stream_warc_cli(spark, tmp_path):
     the batch build, and a second invocation with a new archive
     processes only it (stream checkpoint)."""
     import datetime
-    import os
     import subprocess
     import sys
 
@@ -286,8 +366,8 @@ def test_kg_job_stream_warc_cli(spark, tmp_path):
     wdir.mkdir()
     write_warc(mk(0, 20), str(wdir / "a.warc"))
     out = str(tmp_path / "kg")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
-    cmd = [sys.executable, "/root/repo/jobs/kg_job.py",
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    cmd = [sys.executable, KG_JOB,
            "--warc", str(wdir), "--out", out, "--stream"]
     run = subprocess.run(cmd, env=env, capture_output=True, text=True)
     assert run.returncode == 0, run.stderr[-2000:]
@@ -317,11 +397,9 @@ def test_resume_aborts_when_lineage_unreadable(spark, tmp_path):
     import subprocess
     import sys
 
-    import os
-
     out = str(tmp_path / "kg")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
-    run = [sys.executable, "/root/repo/jobs/kg_job.py", "--out", out]
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    run = [sys.executable, KG_JOB, "--out", out]
     first = subprocess.run(run + ["--n-synth", "40"], env=env,
                            capture_output=True, text=True)
     assert first.returncode == 0, first.stderr[-2000:]
@@ -345,15 +423,13 @@ def test_resume_aborts_when_page_log_lags_lineage(tmp_path):
     lineage committed but its page_log rows did not, --resume must
     abort — it would reprocess those pages into a new snapshot and
     count their triples twice."""
-    import os
     import shutil
     import subprocess
     import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = tmp_path / "kg"
-    env = dict(os.environ, PYTHONPATH=root)
-    run = [sys.executable, os.path.join(root, "jobs", "kg_job.py"),
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    run = [sys.executable, KG_JOB,
            "--out", str(out)]
     first = subprocess.run(run + ["--n-synth", "40"], env=env,
                            capture_output=True, text=True)
@@ -375,17 +451,68 @@ def test_resume_aborts_when_page_log_lags_lineage(tmp_path):
         str(p) for p in (out / "edges").rglob("*.parquet")) == edges_before
 
 
+def test_resume_refuses_a_snapshot_its_crashed_data_phase_left(
+        spark, tmp_path):
+    """A resume run that crashed after edges ∥ nodes committed, before
+    page_log ∥ lineage, leaves snap N with no resume record: --resume
+    must refuse to append the same pages into snap N a second time (the
+    merged view would count them twice). Once page_log records the
+    crashed run's pages, resuming skips them and goes on."""
+    import shutil
+    import subprocess
+    import sys
+
+    out = tmp_path / "kg"
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    run = [sys.executable, KG_JOB, "--out", str(out)]
+
+    def kg_job(*args):
+        return subprocess.run(run + list(args), env=env,
+                              capture_output=True, text=True)
+
+    first = kg_job("--n-synth", "50")
+    assert first.returncode == 0, first.stderr[-2000:]
+    for t in ("page_log", "lineage"):
+        shutil.copytree(out / t, tmp_path / f"{t}_0")
+    second = kg_job("--n-synth", "80", "--resume")
+    assert second.returncode == 0, second.stderr[-2000:]
+    shutil.copytree(out / "page_log", tmp_path / "page_log_1")
+
+    # the crash state: snapshot 1's edges and nodes landed, its
+    # page_log and lineage rows did not
+    for t in ("page_log", "lineage"):
+        shutil.rmtree(out / t)
+        shutil.copytree(tmp_path / f"{t}_0", out / t)
+    edges_before = sorted(str(p) for p in (out / "edges").rglob("*.parquet"))
+    third = kg_job("--n-synth", "80", "--resume")
+    assert third.returncode != 0
+    said = third.stderr + third.stdout
+    assert "refusing" in said
+    assert f"{out}/edges/snap=1" in said and f"{out}/nodes/snap=1" in said
+    assert sorted(
+        str(p) for p in (out / "edges").rglob("*.parquet")) == edges_before
+
+    # page_log landed, lineage did not: the logged pages are skipped
+    shutil.rmtree(out / "page_log")
+    shutil.copytree(tmp_path / "page_log_1", out / "page_log")
+    fourth = kg_job("--n-synth", "80", "--resume")
+    assert fourth.returncode == 0, fourth.stderr[-2000:]
+    logged = spark.read.parquet(str(out / "page_log")) \
+        .agg(F.sum("n_triples")).first()[0]
+    assert read_edges(spark, str(out)).agg(
+        F.sum("n_sources")).first()[0] == logged
+
+
 def test_kg_job_stream_flag_validation(tmp_path):
     """Review r05a: --stream with BOTH --pages and --warc must be
     rejected (the wrong reader would silently yield an empty KG), and
     an empty input dir must drain to '0 edges', not crash on a
     never-created store. Validation happens before the JVM starts."""
-    import os
     import subprocess
     import sys
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
-    base = [sys.executable, "/root/repo/jobs/kg_job.py",
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    base = [sys.executable, KG_JOB,
             "--out", str(tmp_path / "kg"), "--stream"]
     both = subprocess.run(
         base + ["--pages", "/x", "--warc", "/y"],
@@ -409,12 +536,11 @@ def test_kg_job_under_spark_submit_pyfiles(spark, tmp_path):
     rls.zip jobs/kg_job.py`. The package is importable ONLY from the
     zip (no PYTHONPATH, neutral cwd), so this proves the job ships
     itself to executors the way a real cluster submit would."""
-    import os
     import shutil
     import subprocess
     import zipfile
 
-    pkg = "/root/repo/racket_linkeddata_spark"
+    pkg = os.path.join(ROOT, "racket_linkeddata_spark")
     zpath = str(tmp_path / "rls.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _, files in os.walk(pkg):
@@ -422,14 +548,14 @@ def test_kg_job_under_spark_submit_pyfiles(spark, tmp_path):
                 continue
             for f in files:
                 full = os.path.join(root, f)
-                z.write(full, os.path.relpath(full, "/root/repo"))
+                z.write(full, os.path.relpath(full, ROOT))
 
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     out = str(tmp_path / "kg")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     run = subprocess.run(
         [spark_submit, "--master", "local[4]", "--driver-memory", "2g",
-         "--py-files", zpath, "/root/repo/jobs/kg_job.py",
+         "--py-files", zpath, KG_JOB,
          "--n-synth", "60", "--out", out, "--buckets", "4"],
         env=env, cwd=str(tmp_path), capture_output=True, text=True,
         timeout=420)
@@ -443,20 +569,18 @@ def test_kg_job_stream_fails_on_unreadable_store(tmp_path):
     """An empty drain over an existing store whose edges hold a file
     that is not parquet must fail the job: only a missing store counts
     as 0 edges."""
-    import os
     import subprocess
     import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = tmp_path / "kg"
     bucket = out / "edges" / "snap=0" / "bucket=0"
     bucket.mkdir(parents=True)
     (bucket / "part-00000.parquet").write_bytes(b"not a parquet file")
     empty = tmp_path / "emptywarcs"
     empty.mkdir()
-    env = dict(os.environ, PYTHONPATH=root)
+    env = dict(os.environ, PYTHONPATH=ROOT)
     run = subprocess.run(
-        [sys.executable, os.path.join(root, "jobs", "kg_job.py"),
+        [sys.executable, KG_JOB,
          "--warc", str(empty), "--out", str(out), "--stream"],
         env=env, capture_output=True, text=True, timeout=600)
     assert run.returncode != 0, run.stdout[-2000:]

@@ -88,6 +88,49 @@ def test_dedup_is_two_phase_hash_aggregate(spark):
     assert "MapInPandas" in p
 
 
+def test_store_reads_aggregate_only_over_several_writes(spark, tmp_path):
+    """read_edges/read_nodes: a store table that is one Spark write
+    (materialize, compact_snapshots, one streamed micro-batch) is
+    key-unique and is read with no Aggregate and no Exchange; a second
+    write into the table, or a file whose name is not Spark's part-file
+    form, keeps the merging aggregate."""
+    import shutil
+
+    from racket_linkeddata_spark.plans.kg import (
+        build_kg, compact_snapshots, materialize, read_edges, read_nodes)
+    from racket_linkeddata_spark.sources.pages import synthesize_pages
+    from racket_linkeddata_spark.streaming.ingest import run_ingest_kg
+
+    def aggregates(out):
+        seen = []
+        for read in (read_edges, read_nodes):
+            qe = read(spark, str(out))._jdf.queryExecution()
+            seen.append("Aggregate" in qe.optimizedPlan().toString()
+                        or "Exchange" in qe.executedPlan().toString())
+        return seen
+
+    pages = synthesize_pages(spark, 40, partitions=2)
+    kg = build_kg(pages)
+    out = tmp_path / "kg"
+    materialize(kg, str(out), buckets=4)
+    assert aggregates(out) == [False, False]
+    materialize(kg, str(out), buckets=4, mode="append")  # same snapshot
+    assert aggregates(out) == [True, True]
+    compact_snapshots(spark, str(out))
+    assert aggregates(out) == [False, False]
+    part = next((out / "edges").rglob("part-*.parquet"))
+    shutil.copy(part, part.parent / "extra.parquet")
+    assert aggregates(out) == [True, False]
+
+    pages.write.parquet(str(tmp_path / "pages"))
+    streamed = tmp_path / "streamed"
+    run_ingest_kg(spark, str(tmp_path / "pages"), str(streamed),
+                  str(tmp_path / "ckpt"), buckets=4).awaitTermination(180)
+    assert [d.name for d in (streamed / "edges").glob("snap=*")] == \
+        ["snap=0"]
+    assert aggregates(streamed) == [False, False]
+
+
 def test_extraction_ships_only_url_and_html(spark):
     from racket_linkeddata_spark.operators.extract import extract_triples
 

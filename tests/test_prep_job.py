@@ -2,12 +2,14 @@
 survivors the shared plan (plans/curation.prep_corpus) computes
 directly, and the packed table is consistent with them."""
 
+import os
 import subprocess
 import sys
 
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_prep_job_cli_matches_direct_plan(spark, tmp_path):
@@ -20,13 +22,13 @@ def test_prep_job_cli_matches_direct_plan(spark, tmp_path):
         .write.parquet(bench)
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/prep_job.py",
+        [sys.executable, os.path.join(ROOT, "jobs", "prep_job.py"),
          "--docs", f"{SF}/documents.parquet", "--out", out,
          "--benchmark", bench,
          "--mixture", "src2=0.5,src7=0.25,src11=0.0",
          "--budget", "256", "--shards", "8"],
         capture_output=True, text=True, timeout=600,
-        env=dict(__import__("os").environ, PYTHONPATH="/root/repo"))
+        env=dict(os.environ, PYTHONPATH=ROOT))
     assert r.returncode == 0, r.stderr[-2000:]
     assert "prep-corpus done:" in r.stdout
 
@@ -51,7 +53,7 @@ def test_prep_job_cli_matches_direct_plan(spark, tmp_path):
 def test_parse_weights():
     import pytest
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, os.path.join(ROOT, "jobs"))
     from prep_job import parse_weights
 
     assert parse_weights("a=0.5,b=1.0") == {"a": 0.5, "b": 1.0}
