@@ -7,8 +7,8 @@
 
 With --n-synth and no --pages, synthesizes the deterministic test corpus
 first (sandbox use). --warc <dir> reads raw Common-Crawl-style
-.warc/.warc.gz files instead of a parquet pages table (one file = one
-task). --resume anti-joins against <out>/page_log from a previous run
+.warc/.warc.gz files instead of a parquet pages table (a file is never
+split). --resume anti-joins against <out>/page_log from a previous run
 before processing. --stream runs the Structured Streaming ingest over
 the --pages/--warc directory instead (exactly-once per file via the
 stream checkpoint; re-invoke to drain newly arrived files). --staging
@@ -69,14 +69,13 @@ def main():
             raise SystemExit("--stream needs --pages or --warc")
 
     from racket_linkeddata_spark.plans.kg import (
-        build_kg, job_session, materialize)
+        build_kg, compact_snapshots, job_session, materialize, read_edges)
     from racket_linkeddata_spark.sources.pages import synthesize_pages
 
     spark = job_session("kg-construct")
 
     if args.stream:
         path = args.pages or args.warc
-        from racket_linkeddata_spark.plans.kg import read_edges
         from racket_linkeddata_spark.streaming.ingest import run_ingest_kg
         q = run_ingest_kg(spark, path, args.out,
                           f"{args.out}/_checkpoint",
@@ -178,7 +177,6 @@ def main():
     materialize(kg, args.out, buckets=args.buckets,
                 mode="append" if args.resume and processed_log is not None
                 else "overwrite")
-    from racket_linkeddata_spark.plans.kg import compact_snapshots, read_edges
     if args.compact:
         compact_snapshots(spark, args.out)
     n = read_edges(spark, args.out).count()

@@ -74,12 +74,11 @@ def extract_triples(
     loader, json-ld.rkt:84-117) — executors never do network I/O.
 
     This stage is Python-CPU-bound, so task count must track cores, not
-    input bytes: Spark's file-split packing (maxPartitionBytes=128MB)
-    happily puts a whole small corpus in ONE split and starves every other
-    worker (measured 30x). If the scan yields fewer partitions than
-    2x defaultParallelism, repartition up front — a cheap shuffle of
-    (url, html) only; at 100 TB the condition never triggers because
-    splits >> cores.
+    input bytes: a single-file table below the split size is ONE split
+    and starves every other worker (measured 30x). If the scan yields
+    fewer partitions than util.parallelism_target, repartition up front
+    — a cheap shuffle of (url, html) only; at 100 TB the condition never
+    triggers because splits >> cores.
     """
     from .util import ensure_parallelism
 

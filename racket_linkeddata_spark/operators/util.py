@@ -121,11 +121,11 @@ def concurrently(*fns: Callable[[], T]) -> List[T]:
 
 
 def parallelism_target(df: DataFrame) -> int:
-    """The one definition of 'enough partitions for CPU-bound work':
-    twice the cluster's slots — shared by ensure_parallelism and the
-    operators that repartition explicitly (the near-dup pair stream),
-    so the policy cannot drift between call sites."""
-    return df.sparkSession.sparkContext.defaultParallelism * 2
+    """The one definition of 'enough partitions for CPU-bound work': one
+    task per slot, as Spark sizes a scan of small files (more tasks only
+    add each task's fixed cost). Shared by ensure_parallelism and the
+    embedding-LSH pair stream's repartition, so the policy cannot drift."""
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def parallel_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -186,10 +186,10 @@ def _is_narrow(plan) -> bool:
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """``df`` itself when it already yields at least
     parallelism_target partitions, else ``df.repartition(target)``.
-    Spark sizes scans for IO (128 MB splits; a small corpus is one
-    split) and AQE coalesces small shuffles to one partition, either of
-    which starves a CPU-bound stage (Python UDFs, URDNA2015) — measured
-    30x on a single-split corpus.
+    A single-file table smaller than the split size scans as one split,
+    and AQE coalesces small shuffles to one partition, either of which
+    starves a CPU-bound stage (Python UDFs, URDNA2015) — measured 30x
+    on a single-split corpus.
 
     One rule, read from the optimized plan's structure:
 

@@ -47,14 +47,6 @@ def session(app: str = "kg", cpus: Optional[int] = None,
          .config("spark.sql.adaptive.enabled", "true")
          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
          .config("spark.sql.adaptive.skewJoin.enabled", "true")
-         # keep one small file = one split (CPU-bound pandas stages need
-         # task count ≈ cores; default 4MB open-cost packs a whole small
-         # corpus into one split — measured 30x; 32MB still packed 2
-         # files/split and cost ~25% extraction throughput). Setting the
-         # open cost to the full split budget means small files NEVER
-         # pack; production-sized files are unaffected (they split by
-         # maxPartitionBytes regardless).
-         .config("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          # 8192 suits this LOCAL session's small synthetic pages (2048
          # measured ~20% slower from batch overhead). Size by BYTES at
@@ -85,22 +77,20 @@ def job_session(app: str) -> SparkSession:
     return (SparkSession.builder.appName(app)
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
             .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.files.openCostInBytes",
-                    str(128 * 1024 * 1024))
             .config("spark.driver.memory", "8g")
             .getOrCreate())
 
 
 def nodes_from_triples(triples: DataFrame) -> DataFrame:
-    """nodes = all IRI/bnode endpoints of a (skolemized) triples table,
-    one hash aggregate. SHARED by the batch plan (build_kg) and the
-    streaming writer (streaming.ingest.run_ingest_kg) so the two
+    """nodes = all IRI/bnode endpoints of a (skolemized) triples table
+    (each row's subj, and its obj_value unless obj_kind is 2 or NULL),
+    one scan and one hash aggregate. SHARED by the batch plan (build_kg)
+    and the streaming writer (streaming.ingest.run_ingest_kg) so the two
     stores' nodes tables cannot drift."""
-    subj_nodes = triples.select(F.col("subj").alias("canon_uri"))
-    obj_nodes = (triples.filter(F.col("obj_kind") != 2)
-                 .select(F.col("obj_value").alias("canon_uri")))
+    ends = (F.when(F.col("obj_kind") != 2, F.array("subj", "obj_value"))
+            .otherwise(F.array("subj")))
     return (
-        subj_nodes.unionByName(obj_nodes)
+        triples.select(F.explode(ends).alias("canon_uri"))
         .groupBy("canon_uri")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
         .withColumn(
@@ -135,7 +125,7 @@ def build_kg(
     every downstream aggregate from the staged table (the production
     pattern — an Iceberg staging table; measured ~1.5x faster than DF
     cache locally and spill-proof at scale). Without it, ``extracted``
-    (read by edges, twice by nodes, log and lineage) is pinned with a
+    (read by edges, nodes, log and lineage) is pinned with a
     lazy localCheckpoint, which executor loss destroys: on a cluster,
     ``staging_path`` is the durable path."""
     if processed_log is not None:

@@ -8,12 +8,12 @@ pipeline (build_kg, streaming ingest, resume) runs unchanged on raw
 crawl data. No reference counterpart (the reference never touches
 html/WARC; SURVEY.md §2.1 front-end extension).
 
-Execution model (the Common-Crawl granularity): ONE WARC file = one
-task. ``spark.read.format("binaryFile")`` lists the files into splits,
-and an Arrow-batched mapInPandas parses records per file — the standard
-way CC archives are processed (a ~1 GB gzip member stream cannot be
-split mid-file anyway). At 100 TB that is ~100k files across the
-cluster: ample parallelism, zero shuffle.
+Execution model (the Common-Crawl granularity): a WARC file is never
+split. ``spark.read.format("binaryFile")`` lists the files into splits
+(small files packed about one split per slot), and an Arrow-batched
+mapInPandas parses records per file — the standard way CC archives are
+processed (a ~1 GB gzip member stream cannot be split mid-file anyway).
+At 100 TB that is ~100k files, one task each: zero shuffle.
 
 Parser contract (WARC 1.0/1.1):
 
@@ -122,7 +122,7 @@ def parse_warc(data: bytes) -> Tuple[List[Tuple[str, Optional[
 
 def read_warc(spark, path: str):
     """Directory (or glob) of .warc/.warc.gz files -> pages DataFrame
-    ``(url, warc_ts, html, text, lang)``. One file = one task.
+    ``(url, warc_ts, html, text, lang)``. A file is never split.
 
     Only real page rows: the all-null marker row a corrupt file leaves
     in read_warc_log is filtered here — it would otherwise reach
@@ -146,7 +146,7 @@ def read_warc_stream(spark, path: str,
                      max_files_per_trigger: Optional[int] = None):
     """Structured-Streaming twin of read_warc: a binaryFile-source
     readStream over a GROWING crawl directory — new .warc/.warc.gz
-    files become micro-batches (same one-file-one-task granularity,
+    files become micro-batches (same unsplit-file granularity,
     same parser, same pages schema), so streaming/ingest.run_ingest_kg
     can land a live crawl into the same (snap,bucket) store as the
     batch path. File-source checkpointing makes it exactly-once per

@@ -142,7 +142,6 @@ def test_ensure_parallelism_plan_stats_probe(spark):
     exceeds target*maxPartitionBytes -> no-op (same object back)."""
     from racket_linkeddata_spark.operators.util import ensure_parallelism
 
-    target = spark.sparkContext.defaultParallelism * 2
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     up = ensure_parallelism(docs)
     assert up is not docs  # small corpus: repartitioned up

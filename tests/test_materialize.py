@@ -300,7 +300,8 @@ def test_concurrent_writes_extract_each_page_once(spark, tmp_path):
         return html
 
     n = 200
-    # parallelism_target partitions: extract_triples does not fan out
+    # at least parallelism_target partitions: extract_triples does not
+    # fan out
     pages = synthesize_pages(spark, n, partitions=2 * sc.defaultParallelism)
     pages = pages.withColumn("html", counted("html"))
     materialize(build_kg(pages), str(tmp_path / "kg"), buckets=4)

@@ -1,10 +1,13 @@
 """The fan-out rule (operators/util.ensure_parallelism) and the parallel
 pin built on it (parallel_checkpoint): no Spark job at plan time, a
 huge wide plan left to AQE, a starved checkpoint pinned again in
-parallel. The pin rule: a reused intermediate is a localCheckpoint,
-never a CacheManager entry. The runner of independent Spark work
-(concurrently): every function finishes, the first failure wins, and
-the jobs stay in the caller's job group."""
+parallel. The split policy: Spark's own split sizing decides the scans
+(small files pack about one split per slot, a file splits by row
+group), and the fan-outs target one task per slot. The pin rule: a
+reused intermediate is a localCheckpoint, never a CacheManager entry.
+The runner of independent Spark work (concurrently): every function
+finishes, the first failure wins, and the jobs stay in the caller's
+job group."""
 
 import time
 
@@ -15,6 +18,7 @@ from racket_linkeddata_spark.operators.util import (
     concurrently,
     ensure_parallelism,
     parallel_checkpoint,
+    parallelism_target,
 )
 
 SF01 = "/root/testdata/sf0.01"
@@ -85,10 +89,10 @@ def test_ensure_parallelism_huge_wide_plan_is_noop(spark):
 def test_parallel_checkpoint_pins_starved_output_in_parallel(
         spark, monkeypatch):
     """A 1-partition join output comes back as a checkpoint with at
-    least 2 x defaultParallelism partitions; an already-parallel input
+    least parallelism_target partitions; an already-parallel input
     comes back as its first checkpoint, materialized once."""
-    target = 2 * spark.sparkContext.defaultParallelism
     docs = spark.read.parquet(f"{SF01}/documents.parquet")
+    target = parallelism_target(docs)
     ids = spark.createDataFrame([(i,) for i in range(0, 200, 3)],
                                 "doc_id long")
     joined = docs.join(F.broadcast(ids), "doc_id")
@@ -114,6 +118,67 @@ def test_parallel_checkpoint_pins_starved_output_in_parallel(
     pinned = parallel_checkpoint(wide)
     assert made == [pinned]
     assert pinned.rdd.getNumPartitions() == target
+
+
+def _rows_per_partition(df):
+    """The row count of each non-empty partition of ``df`` (one JVM
+    job, no Python worker)."""
+    return [r[1] for r in df.groupBy(F.spark_partition_id()).count()
+            .collect()]
+
+
+def test_small_files_pack_into_one_split_per_slot(spark, tmp_path):
+    """16 small parquet files scan as defaultParallelism partitions, so
+    the extraction over them reads the scan directly: no Exchange under
+    its MapInPandas."""
+    from racket_linkeddata_spark.operators.extract import extract_triples
+    from racket_linkeddata_spark.sources.pages import synthesize_pages
+
+    path = str(tmp_path / "pages")
+    synthesize_pages(spark, 160, partitions=16).write.parquet(path)
+    pages = spark.read.parquet(path)
+    assert len(pages.inputFiles()) == 16
+    assert (pages.rdd.getNumPartitions()
+            == spark.sparkContext.defaultParallelism
+            == parallelism_target(pages))
+    plan = (extract_triples(pages)._jdf.queryExecution().executedPlan()
+            .toString())
+    assert "MapInPandas" in plan and "Exchange" not in plan, plan
+
+
+def test_single_small_file_fans_out_to_the_target(spark):
+    """A single-file table below the split size is one split; the
+    fan-out still lifts it to the target."""
+    docs = spark.read.parquet(f"{SF01}/documents.parquet")
+    assert docs.rdd.getNumPartitions() == 1
+    up = ensure_parallelism(docs)
+    assert up.rdd.getNumPartitions() == parallelism_target(docs)
+
+
+def test_a_lone_file_splits_by_row_group(spark, tmp_path):
+    """A 6 MB file of 6 row groups is above the 4 MB default open cost,
+    so Spark splits it across slots at the default split sizing; with
+    maxPartitionBytes lowered to 1 MB every row group is its own
+    split."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(0)
+    blobs = [rng.bytes(1000) for _ in range(6000)]
+    path = str(tmp_path / "lone.parquet")
+    pq.write_table(pa.table({"b": pa.array(blobs, pa.binary())}), path,
+                   row_group_size=1000, compression="none")
+    assert pq.ParquetFile(path).num_row_groups == 6
+    df = spark.read.parquet(path)
+    assert len(_rows_per_partition(df)) >= 2
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
+        rows = _rows_per_partition(spark.read.parquet(path))
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert sorted(rows) == [1000] * 6
 
 
 def test_pins_leave_the_cache_manager_empty(spark):

@@ -131,6 +131,38 @@ def test_store_reads_aggregate_only_over_several_writes(spark, tmp_path):
     assert aggregates(streamed) == [False, False]
 
 
+def test_nodes_scan_the_triples_once(spark, tmp_path):
+    """nodes_from_triples equals the union of the subject and non-literal
+    object projections, NULL cases included (a NULL obj_kind adds no
+    object row; a NULL obj_value of kind 0/1 counts), and its optimized
+    plan reads one relation under the aggregate."""
+    import json
+
+    from racket_linkeddata_spark.plans.kg import nodes_from_triples
+
+    rows = [("a", 0, "b"), ("a", 1, "_:x"), ("a", 2, "lit"),
+            ("b", None, "c"), ("_:x", 0, None), ("c", 1, None),
+            ("a", 0, "b"), (None, 0, "d"), ("d", None, None)]
+    path = str(tmp_path / "triples")
+    spark.createDataFrame(rows, "subj string, obj_kind tinyint, "
+                          "obj_value string").write.parquet(path)
+    triples = spark.read.parquet(path)
+
+    union = (triples.select(F.col("subj").alias("canon_uri"))
+             .unionByName(triples.filter(F.col("obj_kind") != 2)
+                          .select(F.col("obj_value").alias("canon_uri")))
+             .groupBy("canon_uri").agg(F.count(F.lit(1)).alias("n")))
+    nodes = nodes_from_triples(triples)
+    got = {(r.canon_uri, r.n_mentions) for r in nodes.collect()}
+    assert got == {tuple(r) for r in union.collect()}
+    assert (None, 3) in got and ("b", 3) in got and ("lit", 1) not in got
+
+    plan = json.loads(nodes._jdf.queryExecution().optimizedPlan().toJSON())
+    classes = [n["class"].rsplit(".", 1)[-1] for n in plan]
+    assert classes.count("LogicalRelation") == 1, classes
+    assert "Union" not in classes
+
+
 def test_extraction_ships_only_url_and_html(spark):
     from racket_linkeddata_spark.operators.extract import extract_triples
 
