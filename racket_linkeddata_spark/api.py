@@ -8,9 +8,10 @@ Document-level (pure Python, the reference's library surface):
 
 Cluster-level (Spark-first, imported on first access): every name in
 ``_SPARK_MODULES`` — the KG job (session, build_kg, extract_triples,
-the N-Quads, WARC and pages sources, run_ingest / run_ingest_kg), the
-JSON-LD document operators, and the curation, dedup, ANN, text-stats
-and sketch operators behind prep_corpus and the driver queries.
+the N-Quads, WARC and pages sources, the streaming KG ingest
+run_ingest_kg), the JSON-LD document operators, and the curation,
+dedup, ANN, text-stats and sketch operators behind prep_corpus and the
+driver queries.
 
 Side effect on Spark's Python workers: every Arrow/pandas kernel behind
 the cluster-level names first calls ``operators.util.worker_runtime_tune``,
@@ -88,7 +89,7 @@ _SPARK_MODULES = {
     ".sources.nquads_io": "read_nquads write_nquads",
     ".sources.pages": "synthesize_pages",
     ".sources.warc": "read_warc read_warc_stream write_warc",
-    ".streaming.ingest": "run_ingest run_ingest_kg",
+    ".streaming.ingest": "run_ingest_kg",
 }
 _SPARK_API = {name: module for module, names in _SPARK_MODULES.items()
               for name in names.split()}

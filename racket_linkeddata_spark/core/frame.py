@@ -254,7 +254,7 @@ def frame(
     return _post_process(active, resolved)
 
 
-def _post_process(active, v: Any, key: Optional[str] = None) -> Any:
+def _post_process(active, v: Any) -> Any:
     """Preserve-nulls survive as object member values (defaulted
     properties -> JSON null) but disappear from arrays; singleton arrays
     unwrap unless the term has an @set/@list container (matches the
@@ -269,7 +269,7 @@ def _post_process(active, v: Any, key: Optional[str] = None) -> Any:
     if isinstance(v, dict):
         res: Dict[str, Any] = {}
         for k, val in v.items():
-            r = _post_process(active, val, k)
+            r = _post_process(active, val)
             if isinstance(r, list) and len(r) == 1 \
                     and not _is_keyword(k) \
                     and active.container(k) not in ("@set", "@list"):

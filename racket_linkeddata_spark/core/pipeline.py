@@ -129,14 +129,16 @@ def page_to_triples(
     url: str,
     html: bytes,
     remote_contexts: Optional[Dict[str, Any]] = None,
-    mode: str = "URDNA2015",
     max_permutation_steps: int = 200_000,
 ) -> DocResult:
-    """One page -> canonical triple rows.
+    """One page -> canonical triple rows (URDNA2015).
 
     All graph-level recursion and blank-node sorting stays inside this
     per-document call (north rule confinement); blank labels are
     ``_:c14n<N>``, deterministic for the document in isolation.
+    ``max_permutation_steps`` is the safety bound on URDNA2015's
+    permutation search: a page past it (a large bnode clique) is
+    flagged ``error:canonicalization-budget`` instead of pinning a core.
     """
     quads: List[Quad] = []
     status = "ok"
@@ -194,8 +196,13 @@ def page_to_triples(
             seen.add(line)
             digest_parts.append(line)
             uniq.append(q)
-    digest = hashlib.sha256(
-        "\n".join(digest_parts).encode("utf-8") + b"\n").hexdigest()
+    try:
+        digest = hashlib.sha256(
+            "\n".join(digest_parts).encode("utf-8") + b"\n").hexdigest()
+    except UnicodeEncodeError:
+        # a lone surrogate (JSON "\ud800") is no Unicode scalar value:
+        # no RDF term, and no Arrow string could carry its row
+        return DocResult([], 0, None, "error:lone-surrogate")
 
     rows = []
     for q in uniq:

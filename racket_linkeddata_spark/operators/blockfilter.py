@@ -130,8 +130,7 @@ def blocklist_annotate(documents: DataFrame, terms: List[str], *,
 
 def blocklist_filter(documents: DataFrame, terms: List[str], *,
                      mode: str = "any", threshold_x1000: int = 0,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """Drop blocked documents; survivors keep ALL their columns.
     The verdict comes from the same counting expressions annotate uses
     (shared _verdict), applied as a filter above the token barrier —

@@ -12,7 +12,6 @@ so resume/lineage still sees every processed url.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame
 
 from ..core.pipeline import TRIPLE_COLUMNS, page_to_triples
@@ -26,12 +25,25 @@ TRIPLES_SCHEMA = (
 _MARKER = (None,) * 8
 
 
-def triples_kernel(contexts_broadcast=None, mode: str = "URDNA2015",
-                   max_permutation_steps: int = 200_000):
-    """The per-batch ``mapInPandas`` function over (url, html) batches:
-    the one copy of the extraction loop, shared by the batch stage
-    (extract_triples) and the streaming one (streaming.ingest)."""
+def extract_triples(pages: DataFrame, contexts_broadcast=None) -> DataFrame:
+    """pages(url, html, ...) -> triples DataFrame (TRIPLES_SCHEMA): the
+    one extraction stage, run by the batch plan (plans.kg.build_kg) on a
+    whole table and by the streaming sink on each micro-batch.
+
+    ``contexts_broadcast`` is an optional ``sc.broadcast(dict)`` of
+    pre-fetched remote context documents (the reference's pinned url-map
+    loader, json-ld.rkt:84-117) — executors never do network I/O.
+
+    This stage is Python-CPU-bound, so task count must track cores, not
+    input bytes: a single-file table below the split size is ONE split
+    and starves every other worker (measured 30x). If the scan yields
+    fewer partitions than util.parallelism_target, repartition up front
+    — a cheap shuffle of (url, html) only; at 100 TB the condition never
+    triggers because splits >> cores.
+    """
     import pandas as pd
+
+    from .util import ensure_parallelism
 
     def fn(batches):
         from .util import worker_runtime_tune
@@ -47,8 +59,7 @@ def triples_kernel(contexts_broadcast=None, mode: str = "URDNA2015",
             extend = rows.extend
             append = rows.append
             for url, html in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                res = page_to_triples(url, html, ctxs, mode,
-                                      max_permutation_steps)
+                res = page_to_triples(url, html, ctxs)
                 if res.rows:
                     extend(res.rows)
                 else:
@@ -58,34 +69,8 @@ def triples_kernel(contexts_broadcast=None, mode: str = "URDNA2015",
             else:
                 yield pd.DataFrame({c: [] for c in TRIPLE_COLUMNS})
 
-    return fn
-
-
-def extract_triples(
-    pages: DataFrame,
-    contexts_broadcast=None,
-    mode: str = "URDNA2015",
-    max_permutation_steps: int = 200_000,
-) -> DataFrame:
-    """pages(url, html, ...) -> triples DataFrame (TRIPLES_SCHEMA).
-
-    ``contexts_broadcast`` is an optional ``sc.broadcast(dict)`` of
-    pre-fetched remote context documents (the reference's pinned url-map
-    loader, json-ld.rkt:84-117) — executors never do network I/O.
-
-    This stage is Python-CPU-bound, so task count must track cores, not
-    input bytes: a single-file table below the split size is ONE split
-    and starves every other worker (measured 30x). If the scan yields
-    fewer partitions than util.parallelism_target, repartition up front
-    — a cheap shuffle of (url, html) only; at 100 TB the condition never
-    triggers because splits >> cores.
-    """
-    from .util import ensure_parallelism
-
     pruned = ensure_parallelism(pages.select("url", "html"))
-    return pruned.mapInPandas(
-        triples_kernel(contexts_broadcast, mode, max_permutation_steps),
-        schema=TRIPLES_SCHEMA)
+    return pruned.mapInPandas(fn, schema=TRIPLES_SCHEMA)
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:

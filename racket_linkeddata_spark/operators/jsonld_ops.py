@@ -110,7 +110,7 @@ normalize_documents = _lift(
         _to_rdf(doc, base=base, remote_contexts=ctxs), mode=mode))
 
 
-def _from_rdf_text(nq_text, ctxs, use_native_types=False,
+def _from_rdf_text(nq_text, use_native_types=False,
                    use_rdf_type=False):
     from ..core.from_rdf import from_rdf
     from ..core.nquads import parse
@@ -139,7 +139,7 @@ def from_rdf_documents(docs: DataFrame, *, id_col: str = "doc_id",
                               pdf[nquads_col].tolist()):
                 ids.append(i)
                 try:
-                    outs.append(_from_rdf_text(txt, None, use_native_types,
+                    outs.append(_from_rdf_text(txt, use_native_types,
                                                use_rdf_type))
                     errs.append(None)
                 except (NQuadsParseError, ValueError) as e:

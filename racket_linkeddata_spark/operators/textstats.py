@@ -73,7 +73,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
                        max_score.cast("bigint").alias("marker_hits"))
 
 
-def shingles(docs: DataFrame, n: int = 3, text_col: str = "text"):
+def shingles(n: int = 3, text_col: str = "text"):
     """Distinct word n-gram shingles as an array column (JVM-side).
 
     Docs with fewer than n whitespace tokens yield an EMPTY array: without
@@ -140,7 +140,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     # runs on candidate subsets (max_docs / LSH output). Empty shingle
     # sets (docs shorter than n tokens) are excluded — jaccard is
     # undefined (0/0) for them.
-    s = (d.select("doc_id", shingles(d, n).alias("sh"))
+    s = (d.select("doc_id", shingles(n).alias("sh"))
          .filter(F.size("sh") > 0).localCheckpoint(eager=False))
     a = s.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = s.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))

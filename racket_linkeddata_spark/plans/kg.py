@@ -1,9 +1,12 @@
 """End-to-end KG-construction plan (SURVEY.md §3.2 Spark chain):
 
 pages -> [resume anti-join] -> mapInPandas(extract+expand+toRDF+canonize)
-      -> skolemize bnodes -> entity-link broadcast join
-      -> two-phase dedup (hash aggregate) -> edges / nodes
-      + page log & per-partition lineage.
+      -> skolemize bnodes -> two-phase dedup (hash aggregate)
+      -> edges / nodes + page log & per-partition lineage.
+
+One derivation serves batch and stream: ``build_kg`` on a whole table
+(jobs/kg_job.py) and on each streaming micro-batch
+(streaming.ingest.run_ingest_kg), both landing through ``_write_store``.
 
 Scale notes (100 TB / 1000 executors):
 - extraction has NO shuffle: parquet splits -> tasks, Arrow batches;
@@ -12,7 +15,6 @@ Scale notes (100 TB / 1000 executors):
   and skewed-aggregate handling replace manual salting for hot subjects,
   with the mega-domain url skew already diluted because dedup keys are
   triple contents, not urls);
-- the alias join is broadcast (no shuffle of the big side);
 - ``extracted`` is reused by edges/nodes/log/lineage: a lazy
   localCheckpoint locally, a staging table (Iceberg) at production
   scale.
@@ -27,7 +29,6 @@ from pyspark.sql import (
     DataFrame, DataFrameWriter, SparkSession, functions as F)
 
 from ..operators.dedup import TRIPLE_KEY, dedup_triples, skolemize_bnodes
-from ..operators.entity_link import link_entities
 from ..operators.extract import TRIPLES_SCHEMA, extract_triples, triples_only
 from ..operators.lineage import page_log, partition_lineage, resume_filter
 from ..operators.util import concurrently
@@ -35,8 +36,9 @@ from ..operators.util import concurrently
 
 def session(app: str = "kg", cpus: Optional[int] = None,
             shuffle_partitions: Optional[int] = None) -> SparkSession:
-    """Opinionated local session: AQE on (coalescing + skew handling),
-    Arrow enabled for pandas UDF stages."""
+    """Opinionated local session: one slot per CPU, Arrow enabled for
+    pandas UDF stages (AQE, its coalescing and skew handling are Spark's
+    defaults)."""
     import multiprocessing
 
     cpus = cpus or multiprocessing.cpu_count()
@@ -44,9 +46,6 @@ def session(app: str = "kg", cpus: Optional[int] = None,
          .master(f"local[{cpus}]")
          .config("spark.sql.shuffle.partitions",
                  str(shuffle_partitions or cpus))
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          # 8192 suits this LOCAL session's small synthetic pages (2048
          # measured ~20% slower from batch overhead). Size by BYTES at
@@ -62,7 +61,7 @@ def session(app: str = "kg", cpus: Optional[int] = None,
 def job_session(app: str) -> SparkSession:
     """The session of both spark-submit entries (jobs/kg_job.py,
     jobs/prep_job.py): no master pinning (spark-submit's job on a
-    cluster), AQE on, bounded Arrow batches."""
+    cluster), Arrow enabled, bounded Arrow batches."""
     # page rows carry multi-KB html binaries, and the default
     # 10000-row batches x 32 concurrent tasks exhaust the JVM's direct
     # memory arena (reproduced at 1.2M pages: netty OutOfDirectMemoryError
@@ -74,9 +73,12 @@ def job_session(app: str) -> SparkSession:
     # reproduced at 600k pages). Under spark-submit the builder value is
     # ignored because the JVM is already up — pass --driver-memory 8g on
     # the submit command line (see jobs/kg_job.py's docstring).
+    # Arrow also carries prep_job's driver-side pandas hops
+    # (connected_components' bounded toPandas, _union_find_local's
+    # createDataFrame): Spark's default is the pickled-row path
     return (SparkSession.builder.appName(app)
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-            .config("spark.sql.adaptive.enabled", "true")
             .config("spark.driver.memory", "8g")
             .getOrCreate())
 
@@ -84,9 +86,7 @@ def job_session(app: str) -> SparkSession:
 def nodes_from_triples(triples: DataFrame) -> DataFrame:
     """nodes = all IRI/bnode endpoints of a (skolemized) triples table
     (each row's subj, and its obj_value unless obj_kind is 2 or NULL),
-    one scan and one hash aggregate. SHARED by the batch plan (build_kg)
-    and the streaming writer (streaming.ingest.run_ingest_kg) so the two
-    stores' nodes tables cannot drift."""
+    one scan and one hash aggregate."""
     ends = (F.when(F.col("obj_kind") != 2, F.array("subj", "obj_value"))
             .otherwise(F.array("subj")))
     return (
@@ -104,7 +104,7 @@ class KgResult:
     def __init__(self, extracted, triples, edges, nodes, log, lineage,
                  snapshot_id: int = 0):
         self.extracted = extracted  # raw extraction output (marker rows too)
-        self.triples = triples      # skolemized, linked, pre-dedup
+        self.triples = triples      # skolemized, pre-dedup
         self.edges = edges          # deduped, n_sources
         self.nodes = nodes          # canon_uri, kind, n_mentions
         self.log = log              # per-url page log (resume input)
@@ -114,14 +114,19 @@ class KgResult:
 
 def build_kg(
     pages: DataFrame,
-    aliases: Optional[DataFrame] = None,
     contexts_broadcast=None,
     processed_log: Optional[DataFrame] = None,
     snapshot_id: int = 0,
-    mode: str = "URDNA2015",
     staging_path: Optional[str] = None,
 ) -> KgResult:
-    """``staging_path``: write the extraction once to parquet and compute
+    """pages -> the KG tables of one snapshot: extraction (pinned once),
+    skolemized triples, deduped edges, nodes, page log and lineage.
+
+    ``contexts_broadcast`` carries pre-fetched remote contexts to the
+    extraction (operators.extract.extract_triples); ``processed_log``
+    drops the pages an earlier snapshot logged (resume_filter).
+
+    ``staging_path``: write the extraction once to parquet and compute
     every downstream aggregate from the staged table (the production
     pattern — an Iceberg staging table; measured ~1.5x faster than DF
     cache locally and spill-proof at scale). Without it, ``extracted``
@@ -131,7 +136,7 @@ def build_kg(
     if processed_log is not None:
         pages = resume_filter(pages, processed_log)
 
-    extracted = extract_triples(pages, contexts_broadcast, mode=mode)
+    extracted = extract_triples(pages, contexts_broadcast)
     if staging_path is not None:
         extracted.write.mode("overwrite").parquet(staging_path)
         extracted = pages.sparkSession.read.schema(TRIPLES_SCHEMA) \
@@ -140,18 +145,11 @@ def build_kg(
         extracted = extracted.localCheckpoint(eager=False)
 
     triples = skolemize_bnodes(triples_only(extracted))
-    if aliases is not None:
-        triples = link_entities(triples, aliases)
-
-    edges = dedup_triples(triples)
-
-    nodes = nodes_from_triples(triples)
-
     return KgResult(
         extracted=extracted,
         triples=triples,
-        edges=edges,
-        nodes=nodes,
+        edges=dedup_triples(triples),
+        nodes=nodes_from_triples(triples),
         log=page_log(extracted),
         lineage=partition_lineage(extracted, snapshot_id),
         snapshot_id=snapshot_id,

@@ -44,7 +44,7 @@ def read_nquads(spark: SparkSession, path: str) -> DataFrame:
     return lines.mapInPandas(fn, schema=NQ_SCHEMA)
 
 
-def nquads_line_col(df: DataFrame):
+def nquads_line_col():
     """JVM-side injection-safe N-Quads line (whole-stage codegen; mirrors
     the core serializer's escape set)."""
     def esc_literal(c):
@@ -85,7 +85,7 @@ def nquads_line_col(df: DataFrame):
 
 def write_nquads(triples: DataFrame, path: str, mode: str = "overwrite"):
     """triples DF -> N-Quads text files (one statement per line)."""
-    (triples.select(nquads_line_col(triples).alias("value"))
+    (triples.select(nquads_line_col().alias("value"))
      .write.mode(mode).text(path))
 
 

@@ -263,7 +263,7 @@ def test_minhash_arrow_kernel_bit_identical_to_hof_spec(spark):
         "doc_id long, text string")
     d = base.unionByName(edge)
     spec = d.select(
-        "doc_id", _minhash_cols(shingles(d, n), k).alias("mins"))
+        "doc_id", _minhash_cols(shingles(n), k).alias("mins"))
     got = d.select(
         "doc_id", _mins_arrow_udf(n, k)(F.col("text")).alias("mins"))
     mism = (spec.alias("s")
@@ -289,7 +289,7 @@ def test_shingles_arrow_identical_to_expression_spec(spark):
              (200005, " x y z x y z x y z ")],
             "doc_id long, text string")
         d = base.unionByName(edge)
-        spec = d.select("doc_id", shingles(d, n).alias("s"))
+        spec = d.select("doc_id", shingles(n).alias("s"))
         got = d.select(
             "doc_id", shingles_arrow(n)(F.col("text")).alias("s"))
         mism = (spec.alias("a").join(got.alias("b"), "doc_id")

@@ -532,6 +532,32 @@ def test_kg_job_stream_flag_validation(tmp_path):
     assert "0 edges" in drain.stdout
 
 
+def test_job_session_enables_arrow():
+    """The jobs' session turns on Arrow conversions, Spark's default
+    being off: prep_job's bounded toPandas and createDataFrame(pdf)
+    hops (graph.connected_components) would otherwise take the
+    pickled-row path. Read in a fresh process, so the shared test
+    session's conf stays untouched."""
+    import subprocess
+    import sys
+
+    code = ("from racket_linkeddata_spark.plans.kg import job_session\n"
+            "s = job_session('conf-check')\n"
+            "for k in ('spark.sql.execution.arrow.pyspark.enabled',\n"
+            "          'spark.sql.execution.arrow.maxRecordsPerBatch',\n"
+            "          'spark.sql.adaptive.enabled'):\n"
+            "    print(k, s.conf.get(k))\n"
+            "s.stop()\n")
+    run = subprocess.run([sys.executable, "-c", code],
+                         env=dict(os.environ, PYTHONPATH=ROOT),
+                         capture_output=True, text=True, timeout=300)
+    assert run.returncode == 0, run.stderr[-2000:]
+    conf = dict(line.split() for line in run.stdout.splitlines())
+    assert conf == {"spark.sql.execution.arrow.pyspark.enabled": "true",
+                    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+                    "spark.sql.adaptive.enabled": "true"}
+
+
 def test_kg_job_under_spark_submit_pyfiles(spark, tmp_path):
     """The north rule's literal launch mode: `spark-submit --py-files
     rls.zip jobs/kg_job.py`. The package is importable ONLY from the

@@ -1,7 +1,5 @@
-"""N-Quads Spark source/sink round-trip + streaming ingest with
+"""N-Quads Spark source/sink round-trip + streaming KG ingest with
 checkpoint resume."""
-
-import os
 
 from pyspark.sql import functions as F
 
@@ -12,7 +10,6 @@ from racket_linkeddata_spark.sources.nquads_io import (
     write_nquads,
 )
 from racket_linkeddata_spark.sources.pages import synthesize_pages
-from racket_linkeddata_spark.streaming.ingest import run_ingest
 
 NQ = """<http://example.com/s> <http://example.com/p> <http://example.com/o> .
 <http://example.com/s> <http://example.com/p> "plain" .
@@ -39,44 +36,15 @@ def test_nquads_read_write_roundtrip(spark, tmp_path):
     assert lines == {serialize_quad(q) for q in got}
 
 
-def test_streaming_ingest_and_checkpoint_resume(spark, tmp_path):
-    pages_dir = str(tmp_path / "pages")
-    out = str(tmp_path / "triples")
-    ckpt = str(tmp_path / "ckpt")
-
-    synthesize_pages(spark, 50, partitions=2).write.parquet(
-        pages_dir, mode="overwrite")
-    q = run_ingest(spark, pages_dir, out, ckpt)
-    q.awaitTermination(120)
-    first = spark.read.parquet(out)
-    n_first = first.count()
-    urls_first = first.select("url").distinct().count()
-    assert urls_first == 50
-
-    # new files arrive; resume from checkpoint processes ONLY them
-    (synthesize_pages(spark, 80, partitions=2)
-     .filter(F.col("url").rlike("/page/(5[0-9]|6[0-9]|7[0-9])$"))
-     .write.mode("append").parquet(pages_dir))
-    q2 = run_ingest(spark, pages_dir, out, ckpt)
-    q2.awaitTermination(120)
-    after = spark.read.parquet(out)
-    assert after.select("url").distinct().count() == 80
-    # no double-processing: the original 50 urls keep identical row counts
-    before_counts = first.groupBy("url").count().withColumnRenamed(
-        "count", "n_before")
-    after_counts = after.groupBy("url").count()
-    redone = (after_counts.join(before_counts, "url")
-              .filter(F.col("count") != F.col("n_before")).count())
-    assert redone == 0
-    assert after.count() > n_first
-
-
 def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
     """run_ingest_kg lands micro-batches in the SAME (snap, bucket)
-    layout as batch materialize: the merged read view over the streamed
-    store equals a batch build_kg over the same pages, and checkpoint
-    resume processes only new files."""
-    from racket_linkeddata_spark.plans.kg import build_kg, read_edges
+    layout as batch materialize: after each wave the merged read view
+    and the page log over the streamed store equal a batch build_kg over
+    the same pages; checkpoint resume processes only the new files, and
+    a restart with nothing new adds nothing."""
+    from racket_linkeddata_spark.operators.lineage import resume_filter
+    from racket_linkeddata_spark.plans.kg import (
+        build_kg, read_edges, read_nodes)
     from racket_linkeddata_spark.streaming.ingest import run_ingest_kg
 
     pages_dir = str(tmp_path / "pages")
@@ -85,60 +53,65 @@ def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
     key = ["subj", "pred", "obj_kind", "obj_value", "obj_dt",
            "obj_lang", "graph"]
 
-    synthesize_pages(spark, 40, partitions=2).write.parquet(
-        pages_dir, mode="overwrite")
-    q = run_ingest_kg(spark, pages_dir, out, ckpt, buckets=4)
-    q.awaitTermination(180)
-
     def merged():
         return {tuple(r[k] for k in key): r.n_sources
                 for r in read_edges(spark, out).collect()}
 
-    batch1 = build_kg(synthesize_pages(spark, 40, partitions=2)).edges
-    want1 = {tuple(r[k] for k in key): r.n_sources
-             for r in batch1.collect()}
+    def logged():
+        return [(r.url, r.n_triples, r.canon_hash, r.status, r.snap)
+                for r in spark.read.parquet(f"{out}/page_log").collect()]
+
+    def want(n):
+        kg = build_kg(synthesize_pages(spark, n, partitions=2))
+        edges = {tuple(r[k] for k in key): r.n_sources
+                 for r in kg.edges.collect()}
+        log = {r.url: (r.n_triples, r.canon_hash, r.status)
+               for r in kg.log.collect()}
+        return kg, edges, log
+
+    synthesize_pages(spark, 40, partitions=2).write.parquet(
+        pages_dir, mode="overwrite")
+    run_ingest_kg(spark, pages_dir, out, ckpt,
+                  buckets=4).awaitTermination(180)
+    _, want1, want_log1 = want(40)
     assert merged() == want1
+    first = logged()
+    assert {r[0]: r[1:4] for r in first} == want_log1
+    assert len(first) == 40 and {r[4] for r in first} == {0}
 
     # second wave: resume processes only the new files; merged view now
     # equals a batch build over ALL 70 pages
     (synthesize_pages(spark, 70, partitions=2)
      .filter(F.col("url").rlike("/page/(4[0-9]|5[0-9]|6[0-9])$"))
      .write.mode("append").parquet(pages_dir))
-    q2 = run_ingest_kg(spark, pages_dir, out, ckpt, buckets=4)
-    q2.awaitTermination(180)
-    batch2 = build_kg(synthesize_pages(spark, 70, partitions=2)).edges
-    want2 = {tuple(r[k] for k in key): r.n_sources
-             for r in batch2.collect()}
+    run_ingest_kg(spark, pages_dir, out, ckpt,
+                  buckets=4).awaitTermination(180)
+    batch, want2, want_log2 = want(70)
     assert merged() == want2
+    second = logged()
+    # each of the 70 urls logged exactly once, the first wave's urls in
+    # the first micro-batch's snapshot only: nothing was reprocessed
+    assert sorted(r[0] for r in second) == sorted(want_log2)
+    assert {r[0]: r[1:4] for r in second} == want_log2
+    assert set(first) <= set(second)
+    assert {r[0] for r in second if r[4] == 1} == \
+        set(want_log2) - set(want_log1)
 
-    # NODES parity too (ADVICE r03): the streamed nodes table shares
-    # build_kg's aggregation via plans.kg.nodes_from_triples — the
+    # NODES parity too: the streamed micro-batches run build_kg, so the
     # merged read view must equal the batch nodes exactly
-    from racket_linkeddata_spark.plans.kg import read_nodes
     got_nodes = {(r.canon_uri, r.kind): r.n_mentions
                  for r in read_nodes(spark, out).collect()}
-    batch_nodes = build_kg(synthesize_pages(spark, 70, partitions=2)).nodes
     want_nodes = {(r.canon_uri, r.kind): r.n_mentions
-                  for r in batch_nodes.collect()}
+                  for r in batch.nodes.collect()}
     assert got_nodes == want_nodes
 
-    # PAGE LOG + LINEAGE parity (north rule: metrics for the streaming
-    # path too): streamed page_log rows equal the batch run's, total
-    # lineage triple_count matches, and a BATCH resume against the
-    # streamed page_log skips every streamed url
-    from racket_linkeddata_spark.operators.lineage import resume_filter
-    slog = spark.read.parquet(f"{out}/page_log")
-    got_log = {r.url: (r.n_triples, r.canon_hash, r.status)
-               for r in slog.collect()}
-    batch_log = build_kg(synthesize_pages(spark, 70, partitions=2)).log
-    want_log = {r.url: (r.n_triples, r.canon_hash, r.status)
-                for r in batch_log.collect()}
-    assert got_log == want_log
+    # LINEAGE (north rule: metrics for the streaming path too): total
+    # lineage triple_count matches the log, and a BATCH resume against
+    # the streamed page_log skips every streamed url
     slin = spark.read.parquet(f"{out}/lineage")
     assert (slin.agg(F.sum("triple_count")).first()[0]
-            == batch_log.sparkSession.createDataFrame(
-                [(v[0],) for v in want_log.values()], "n long")
-            .agg(F.sum("n")).first()[0])
+            == sum(v[0] for v in want_log2.values()))
+    slog = spark.read.parquet(f"{out}/page_log")
     remaining = resume_filter(synthesize_pages(spark, 70, partitions=2),
                               slog)
     assert remaining.count() == 0
@@ -146,8 +119,9 @@ def test_streaming_kg_ingest_matches_batch_build(spark, tmp_path):
     # restart with no new data: no new snapshots, store unchanged
     snaps_before = {r.snap for r in spark.read.parquet(f"{out}/edges")
                     .select("snap").distinct().collect()}
-    q3 = run_ingest_kg(spark, pages_dir, out, ckpt, buckets=4)
-    q3.awaitTermination(180)
+    run_ingest_kg(spark, pages_dir, out, ckpt,
+                  buckets=4).awaitTermination(180)
     snaps_after = {r.snap for r in spark.read.parquet(f"{out}/edges")
                    .select("snap").distinct().collect()}
     assert snaps_after == snaps_before and merged() == want2
+    assert sorted(logged()) == sorted(second)
